@@ -74,7 +74,7 @@ def test_compact_final_tier_never_exceeds_budget(monkeypatch):
     return an over-budget line."""
     out = dict(_current_record())
     scalars_len = len(
-        json.dumps(
+        bench.compact_json(
             {
                 k: v
                 for k, v in out.items()

@@ -68,7 +68,7 @@ def dq_orders_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("").alias("v4"),
         )
         integ = row if integ is None else integ.unionByName(row)
-    return prof.unionByName(integ).orderBy("family", "name")
+    return prof.unionByName(integ)
 
 
 DQ_SQL = f"""

@@ -652,9 +652,7 @@ def ts_ohlc_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, ["user_id"], "b", "ts", "value", tiebreak_col="event_id", unique_order=True
     )
     daily = ohlc_coarsen(hourly, ["user_id"], "b", factor=24)
-    return daily.select(
-        "user_id", "B", "n_samples", "open", "high", "low", "close"
-    ).orderBy("user_id", "B")
+    return daily.select("user_id", "B", "n_samples", "open", "high", "low", "close")
 
 
 OHLC_HIERARCHY_SQL = """
