@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+$SPARK_GRAFT_CPUS defaults to the cores this process may run on.
 
 Prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -21,8 +22,10 @@ import sqlite3
 import tempfile
 import time
 
+from xxt_cdc_spark.session import local_cpus
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = local_cpus()
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -572,14 +575,26 @@ def bench_streaming(spark) -> dict:
         }
 
 
+def _warm_percentiles(q) -> dict:
+    """Batch count and P50/P95 triggerExecution of a stopped stream's
+    batches that carried rows, after the first 5 of them (JIT/codegen
+    warm-up)."""
+    from xxt_cdc_spark.obs.metrics import percentile, snapshot_from_query
+
+    durs = snapshot_from_query(q).batch_durations_ms[5:]
+    return {
+        "batches": len(durs),
+        "p50_ms": percentile(durs, 0.5),
+        "p95_ms": percentile(durs, 0.95),
+    }
+
+
 def bench_mor_latency(spark, seconds: float = 22.0) -> dict:
     """Merge-on-read write-path latency: the rate transport (no file
     listing/scan) appended through the JVM-only parquet log sink —
     Spark's lowest-latency apply posture (sinks/changelog_mor.py;
     convergence happens at read time, off this path). Reported
     percentiles skip the first 5 batches (JIT/codegen warm-up)."""
-    import json as _json
-
     from xxt_cdc_spark.sinks.changelog_mor import ChangelogMorTable
     from xxt_cdc_spark.streaming.pipeline import read_rate_envelope_stream
 
@@ -604,19 +619,7 @@ def bench_mor_latency(spark, seconds: float = 22.0) -> dict:
         time.sleep(seconds)
         q.stop()
         q.awaitTermination(60)
-        durs = []
-        for p in q.recentProgress:
-            if not isinstance(p, dict):
-                j = p.json() if callable(getattr(p, "json", None)) else p.json
-                p = _json.loads(j)
-            if p.get("numInputRows"):
-                durs.append(float(p["durationMs"]["triggerExecution"]))
-        durs = sorted(durs[5:])
-
-        def pct(p: float):
-            return durs[min(len(durs) - 1, int(round(p * (len(durs) - 1))))] if durs else None
-
-        return {"batches": len(durs), "p50_ms": pct(0.5), "p95_ms": pct(0.95)}
+        return _warm_percentiles(q)
 
 
 # ---- streaming-drift anchor (r8 VERDICT item 4) ----------------------------
@@ -646,7 +649,6 @@ STREAM_LIVE_OFFICIAL_P50_MS: float | None = 208.0  # r14 pin = BENCH_r13 officia
 
 def bench_stream_anchor(spark, seconds: float = 20.0) -> dict:
     """Fixed-shape streaming micro-anchor (see pin note above)."""
-    import json as _json
 
     def _noop(batch_df, _id):
         batch_df.count()
@@ -665,19 +667,7 @@ def bench_stream_anchor(spark, seconds: float = 20.0) -> dict:
         time.sleep(seconds)
         q.stop()
         q.awaitTermination(60)
-        durs = []
-        for p in q.recentProgress:
-            if not isinstance(p, dict):
-                j = p.json() if callable(getattr(p, "json", None)) else p.json
-                p = _json.loads(j)
-            if p.get("numInputRows"):
-                durs.append(float(p["durationMs"]["triggerExecution"]))
-        durs = sorted(durs[5:])  # same JIT warm-up skip as the MOR pass
-
-        def pct(f: float):
-            return durs[min(len(durs) - 1, int(round(f * (len(durs) - 1))))] if durs else None
-
-        return {"batches": len(durs), "p50_ms": pct(0.5), "p95_ms": pct(0.95)}
+        return _warm_percentiles(q)
 
 
 def bench_binlog_transport(spark) -> dict:
@@ -686,9 +676,8 @@ def bench_binlog_transport(spark) -> dict:
     MicroBatchStream (Python source → Arrow-less tuple decode) into a
     count. Measures the source's decode+plan path, the part a Kafka
     transport would replace with JVM decode."""
-    import json as _json
-
     from xxt_cdc_spark.changefeed import orders_changefeed, to_envelope
+    from xxt_cdc_spark.obs.metrics import snapshot_from_query
     from xxt_cdc_spark.streaming.binlog_source import BinlogLogWriter, read_binlog_stream
 
     with tempfile.TemporaryDirectory() as tmp:
@@ -726,13 +715,8 @@ def bench_binlog_transport(spark) -> dict:
             )
             q.awaitTermination(600)
             dt = time.monotonic() - t0
-            n, exec_ms = 0, 0.0
-            for p in q.recentProgress:
-                if not isinstance(p, dict):
-                    p = _json.loads(p.json())
-                if p.get("numInputRows"):
-                    n += p["numInputRows"]
-                    exec_ms += float(p["durationMs"]["triggerExecution"])
+            snap = snapshot_from_query(q)
+            n, exec_ms = snap.events_ingested, sum(snap.batch_durations_ms)
             # events/s over batch execution time: the one-time stream
             # startup (~3 s: plan + Python worker pool spin-up)
             # amortizes to nothing on a long-running stream, so
@@ -968,7 +952,7 @@ def bench_snapshot(spark) -> dict:
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     n = df.count()
     t0 = time.monotonic()
-    _materialize(df.repartition(int(CPUS)))
+    _materialize(df.repartition(CPUS))
     dt = time.monotonic() - t0
     return {"rows": n, "sec": dt, "rows_per_sec": n / dt}
 
@@ -1332,7 +1316,7 @@ def main() -> None:
         "unit": "sec",
         "queries": per_query,
         "sf": float(sf),
-        "cpus": int(CPUS),
+        "cpus": CPUS,
     }
     new_q = [q for q in HEADLINE if q not in PREV_HEADLINE]
     dropped_q = [q for q in PREV_HEADLINE if q not in HEADLINE]

@@ -5,7 +5,7 @@
 Runs one registry query (or the CDC sink-apply bench) in THIS process
 at one sf dir, best-of-N, and prints a JSON line. The wrapper loop in
 the Makefile/SCALING.md runs each (query, sf) in a fresh process so
-numbers are session-residue-free (same protocol as tools/dedup_ab.py),
+numbers are session-residue-free (same protocol as tools/solo_query.py),
 then slope = t(sf1) / t(sf0.1) against the 10x data growth: linear
 scaling => slope ~10 with fixed parallelism, sublinear on this box
 while 32 cores are not yet saturated at sf0.1.

@@ -106,6 +106,7 @@ def _rate_span(batches, measured, trigger_ms, secs):
 
 
 def run_point(spark, lines: list[str], trigger_ms: int, rate_eps: int, secs: float) -> dict:
+    from xxt_cdc_spark.obs.metrics import percentile
     from xxt_cdc_spark.sinks.upsert import JdbcUpsertWriter, apply_batch
     from xxt_cdc_spark.streaming.pipeline import (
         CDCStreamPipeline,
@@ -204,23 +205,17 @@ def run_point(spark, lines: list[str], trigger_ms: int, rate_eps: int, secs: flo
                     )
                 )
         measured = batches[3:]  # JIT warm-up skip
-        durs_sorted = sorted(b[1] for b in measured)
+        durs = [b[1] for b in measured]
         rows = sum(b[2] for b in measured)
         span = _rate_span(batches, measured, trigger_ms, secs)
-
-        def pct(f: float):
-            if not durs_sorted:
-                return None
-            return durs_sorted[min(len(durs_sorted) - 1, int(round(f * (len(durs_sorted) - 1))))]
-
         return {
             "trigger_ms": trigger_ms,
             "rate_eps": rate_eps,
             "rows_per_batch": per_file,
-            "batches": len(durs_sorted),
-            "p50_ms": pct(0.5),
-            "p95_ms": pct(0.95),
-            "p99_ms": pct(0.99),
+            "batches": len(durs),
+            "p50_ms": percentile(durs, 0.5),
+            "p95_ms": percentile(durs, 0.95),
+            "p99_ms": percentile(durs, 0.99),
             "events_per_sec": round(rows / span) if measured else 0,
         }
 

@@ -176,8 +176,8 @@ def jaccard_pairs(
     # is unpersisted here by design: callers re-materialize the frame
     # (bench best-of-2, clustering fixpoints), and cross-query
     # executor-storage accumulation was tested and REFUTED as a drift
-    # source (tools/cache_pressure_ab.py, SCALING r13 — drift is
-    # box-level); the bench loop clearCache()s before the sink phases.
+    # source (SCALING.md "Round-13: cache-pressure hypothesis" — drift
+    # is box-level); the bench loop clearCache()s before the sink phases.
     sizes = shingle_sizes(sh, id_col).persist()
     # single-pass: shared counts straight off the shingle self-join
     a = sh.select(F.col(id_col).alias("i"), "sh64")

@@ -14,10 +14,20 @@ can consume ``MetricsSnapshot.as_dict()`` 1:1 (M33).
 
 from __future__ import annotations
 
+import json
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql.streaming import StreamingQueryListener
+
+
+def percentile(xs, p: float) -> float | None:
+    """Nearest-rank percentile ``p`` (0..1) of ``xs`` in any order;
+    None when ``xs`` is empty."""
+    if not xs:
+        return None
+    s = sorted(xs)
+    return s[min(len(s) - 1, int(round(p * (len(s) - 1))))]
 
 
 @dataclass
@@ -41,15 +51,39 @@ class MetricsSnapshot:
         """P50/P95/P99 of micro-batch apply duration — the engine's
         apply-latency figure comparable to BASELINE.md (events enter at
         batch start, are committed at batch end)."""
-        if not self.batch_durations_ms:
-            return {"p50_ms": None, "p95_ms": None, "p99_ms": None}
-        xs = sorted(self.batch_durations_ms)
+        xs = self.batch_durations_ms
+        return {
+            "p50_ms": percentile(xs, 0.50),
+            "p95_ms": percentile(xs, 0.95),
+            "p99_ms": percentile(xs, 0.99),
+        }
 
-        def pct(p: float) -> float:
-            i = min(len(xs) - 1, int(round(p * (len(xs) - 1))))
-            return xs[i]
-
-        return {"p50_ms": pct(0.50), "p95_ms": pct(0.95), "p99_ms": pct(0.99)}
+    def record(self, progress: dict) -> None:
+        """Fold one micro-batch progress record (the progress JSON as a
+        dict, or a ``StreamingQueryProgress``, re-read through its
+        ``json`` so source offsets stay JSON values rather than their
+        ``str()``). Only batches with rows add to ``batch_durations_ms``."""
+        if hasattr(progress, "json"):
+            progress = json.loads(progress.json)
+        rows = int(progress.get("numInputRows") or 0)
+        self.batches += 1
+        self.events_ingested += rows
+        self.events_applied += rows
+        self.input_rows_per_second = float(progress.get("inputRowsPerSecond") or 0.0)
+        self.processed_rows_per_second = float(progress.get("processedRowsPerSecond") or 0.0)
+        dur = float((progress.get("durationMs") or {}).get("triggerExecution", 0.0))
+        self.last_batch_duration_ms = dur
+        if rows:
+            self.batch_durations_ms.append(dur)
+        self.source_positions = [
+            {
+                "description": s.get("description"),
+                "start_offset": s.get("startOffset"),
+                "end_offset": s.get("endOffset"),
+                "latest_offset": s.get("latestOffset"),
+            }
+            for s in (progress.get("sources") or [])
+        ]
 
     @property
     def uptime_s(self) -> float:
@@ -98,32 +132,9 @@ def snapshot_from_query(query) -> MetricsSnapshot:
     Note ``spark.sql.streaming.numRecentProgressUpdates`` (default 100)
     bounds how many batches are retained — raise it for longer runs.
     """
-    import json as _json
-
     snap = MetricsSnapshot()
     for p in query.recentProgress:
-        if not isinstance(p, dict):
-            j = p.json() if callable(getattr(p, "json", None)) else p.json
-            p = _json.loads(j)
-        rows = int(p.get("numInputRows") or 0)
-        snap.batches += 1
-        snap.events_ingested += rows
-        snap.events_applied += rows
-        snap.input_rows_per_second = float(p.get("inputRowsPerSecond") or 0.0)
-        snap.processed_rows_per_second = float(p.get("processedRowsPerSecond") or 0.0)
-        dur = float((p.get("durationMs") or {}).get("triggerExecution", 0.0))
-        snap.last_batch_duration_ms = dur
-        if rows:
-            snap.batch_durations_ms.append(dur)
-        snap.source_positions = [
-            {
-                "description": s.get("description"),
-                "start_offset": s.get("startOffset"),
-                "end_offset": s.get("endOffset"),
-                "latest_offset": s.get("latestOffset"),
-            }
-            for s in (p.get("sources") or [])
-        ]
+        snap.record(p)
     return snap
 
 
@@ -137,16 +148,7 @@ class CDCMetricsListener(StreamingQueryListener):
         self.snapshot.started_at = time.time()
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = event.progress
-        self.snapshot.batches += 1
-        self.snapshot.events_ingested += int(p.numInputRows or 0)
-        self.snapshot.events_applied += int(p.numInputRows or 0)
-        self.snapshot.input_rows_per_second = float(p.inputRowsPerSecond or 0.0)
-        self.snapshot.processed_rows_per_second = float(p.processedRowsPerSecond or 0.0)
-        durations = p.durationMs or {}
-        self.snapshot.last_batch_duration_ms = float(durations.get("triggerExecution", 0.0))
-        if p.numInputRows:
-            self.snapshot.batch_durations_ms.append(self.snapshot.last_batch_duration_ms)
+        self.snapshot.record(event.progress)
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         pass

@@ -70,9 +70,10 @@ def _seg_bounds(L: Column, k: int, parts: int) -> tuple[Column, Column]:
 
 def _right_probes(r_names: DataFrame, d: int) -> DataFrame:
     """Right probes: the d+1 segments of each (long-enough) string.
-    Factored to module level so tools/profile_fuzzy.py measures the
-    SAME builders the operator runs (r12 ADVICE: a hand-copied probe
-    shape in the profiler silently goes stale)."""
+    Factored to module level so a stage profile measures the SAME
+    builders the operator runs (r12 ADVICE: a hand-copied probe shape
+    in the profiler silently goes stale; SCALING.md "Round-12:
+    fuzzy_join_part_names decomposed")."""
     parts = d + 1
     rlen = F.length("r_str")
     r_segs = []

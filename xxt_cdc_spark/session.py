@@ -14,6 +14,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def local_cpus() -> int:
+    """Cores for a ``local[N]`` master: $SPARK_GRAFT_CPUS when set, else
+    the cores this process may run on (a fixed default oversubscribes a
+    small host: a 3-row job on 4 cores ran as a 32-task stage)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 # Shuffle partitions and executor heap are the TWO confs that must
 # track data volume: 32 partitions / 8g heap is right for the sf0.1
 # gate (≈1 core per partition, no spill), but a fixed count under 100×
@@ -26,7 +35,7 @@ from pyspark.sql import SparkSession
 # Size ∝ data via SPARK_GRAFT_SHUFFLE_PARTITIONS / SPARK_DRIVER_MEMORY;
 # cluster deployments set both per job.
 DEFAULT_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or local_cpus()
 )
 
 
@@ -39,9 +48,8 @@ def get_spark(
     """Build (or fetch) the session.
 
     On a real cluster, ``master`` is provided by spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS]``.
+    default to ``local[N]`` with N from ``local_cpus()``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .config(
@@ -83,7 +91,8 @@ def get_spark(
         # otherwise lands on ChecksumFs-wrapped LocalFs REGARDLESS of
         # fs.file.impl, so every offset-WAL/commit-log/sink-manifest
         # write paid a .crc shadow write — measured 195 → 147 ms MOR
-        # append p50 from this one binding (tools/mor_ab.py, r4)
+        # append p50 from this one binding (SCALING.md "Latency
+        # posture", round-4 latency pass)
         .config(
             "spark.hadoop.fs.AbstractFileSystem.file.impl",
             "org.apache.hadoop.fs.local.RawLocalFs",
@@ -93,7 +102,7 @@ def get_spark(
     if master:
         builder = builder.config("spark.master", master)
     elif "SPARK_MASTER" not in os.environ:
-        builder = builder.config("spark.master", f"local[{cpus}]")
+        builder = builder.config("spark.master", f"local[{local_cpus()}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
