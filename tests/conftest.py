@@ -14,6 +14,8 @@ def spark():
 
     s = get_spark("xxt-cdc-tests", shuffle_partitions=8)
     yield s
+    # removes the driver's Unix socket file from the temp directory
+    s.stop()
 
 
 @pytest.fixture(scope="session")

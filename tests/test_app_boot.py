@@ -119,12 +119,20 @@ class TestBootOverBinlogTransport:
         query, state, server, api = run_pipeline(cfg, args, spark=spark)
         try:
             query.awaitTermination(120)
+            _, port = server.server_address
+            with urllib.request.urlopen(
+                f"http://127.0.0.1:{port}/api/v1/metrics", timeout=5
+            ) as r:
+                served = json.loads(r.read().decode())
         finally:
             server.shutdown()
         keys = sorted(
             json.loads(r.key)["id"] for r in state.read().select("key").collect()
         )
         assert keys == list(range(10, 25))  # pre-seek prefix skipped
+        # the endpoint reads the query, not the empty snapshot it was built with
+        assert served["events_ingested"] == 15
+        assert served["batches"] >= 1
 
     def test_mutually_exclusive_transports(self, tmp_path):
         rc = main(

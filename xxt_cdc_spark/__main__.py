@@ -57,13 +57,14 @@ def build_parser() -> argparse.ArgumentParser:
 
 def run_pipeline(cfg, args, spark=None):
     """Assemble and run the file-envelope → state-mirror pipeline.
-    Returns (query, state_table, api_server) for the caller to manage
-    (tests drive this directly; main() blocks on the query)."""
+    Returns (query, state_table, api_server, api) for the caller to
+    manage (tests drive this directly; main() blocks on the query). Every
+    request to the API reads the running query's progress."""
     from pyspark.sql import functions as F
 
     from xxt_cdc_spark.api import ManagementAPI
     from xxt_cdc_spark.model.states import CDCState
-    from xxt_cdc_spark.obs.metrics import MetricsSnapshot
+    from xxt_cdc_spark.obs.metrics import MetricsSnapshot, snapshot_from_query
     from xxt_cdc_spark.operators.table_filter import TableFilter
     from xxt_cdc_spark.session import get_spark
     from xxt_cdc_spark.sinks.parquet_state import ParquetStateTable
@@ -125,6 +126,7 @@ def run_pipeline(cfg, args, spark=None):
         state=CDCState.STREAMING,
         components={"pipeline": "RUNNING", "state_mirror": args.state_dir},
         config=asdict(cfg),
+        poll=lambda: snapshot_from_query(query),
     )
     server = api.start(port=args.api_port)
     return query, state, server, api
@@ -152,15 +154,17 @@ def main(argv=None) -> int:
         print("--envelope-dir and --binlog-dir are mutually exclusive", file=sys.stderr)
         return 2
 
-    from xxt_cdc_spark.obs.metrics import snapshot_from_query
+    from xxt_cdc_spark.session import get_spark
 
-    query, state, server, api = run_pipeline(cfg, args)
+    spark = get_spark("xxt-cdc")
+    query, state, server, api = run_pipeline(cfg, args, spark=spark)
     try:
         query.awaitTermination()
-        api.metrics = snapshot_from_query(query)
         return 0
     finally:
         server.shutdown()
+        # a session left running leaves its Unix socket file behind
+        spark.stop()
 
 
 if __name__ == "__main__":

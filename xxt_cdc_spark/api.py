@@ -10,6 +10,7 @@ http.server for ops parity without dependencies.
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from xxt_cdc_spark.model.states import CDCState
@@ -23,6 +24,9 @@ class ManagementAPI:
     state: CDCState = CDCState.INIT
     components: dict[str, str] = field(default_factory=dict)
     config: dict = field(default_factory=dict)
+    # when set, every HTTP request re-reads the metrics through it (the
+    # CLI polls its running query with ``snapshot_from_query``)
+    poll: Callable[[], MetricsSnapshot] | None = None
 
     _REDACT = ("password", "secret", "token", "key")
 
@@ -95,6 +99,14 @@ class ManagementAPI:
 
         return prometheus_text(self.metrics)
 
+    def refresh(self) -> None:
+        """Re-read the metrics through ``poll``, keeping the uptime's
+        start."""
+        if self.poll is not None:
+            snap = self.poll()
+            snap.started_at = self.metrics.started_at
+            self.metrics = snap
+
     def _make_server(self, port: int, host: str):
         import http.server
 
@@ -102,6 +114,7 @@ class ManagementAPI:
 
         class Handler(http.server.BaseHTTPRequestHandler):
             def do_GET(self):  # noqa: N802 (stdlib API)
+                api.refresh()
                 if self.path == "/metrics":
                     body = api.prometheus_endpoint().encode()
                     ctype = "text/plain; version=0.0.4; charset=utf-8"

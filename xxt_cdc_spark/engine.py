@@ -106,11 +106,10 @@ class CDCEngine:
             t0 = time.monotonic()
             low = self.current_position()  # low watermark (S9)
             store.save(self.snapshot_id, low, None, "ACTIVE")
-            snap = self.snapshot_source()
-            self.apply_fn(snap)  # bulk idempotent write (S5/O18)
+            self.apply_fn(self.snapshot_source())  # bulk idempotent write (S5/O18)
             high = self.current_position()  # high watermark
             store.save(self.snapshot_id, low, high, "SNAPSHOT_DONE")
-            stats["phases"].append({"phase": "SNAPSHOT", "rows": snap.count(), "low": low, "high": high, "sec": time.monotonic() - t0})
+            stats["phases"].append({"phase": "SNAPSHOT", "low": low, "high": high, "sec": time.monotonic() - t0})
 
             self._to(CDCState.CATCHUP)
             t0 = time.monotonic()

@@ -1554,8 +1554,10 @@ def apply_batch(
     through ONE vectorized writer there — no executor Python worker,
     no ``mapInArrow`` dispatch. This is the LATENCY posture for
     transport-aligned small batches: the zero-shuffle plan is already
-    effectively one serial writer, so the executor round trip
-    (~60-80 ms/batch measured) is pure overhead; the reference's
+    effectively one serial writer, so the executor round trip (a
+    Python task's fixed cost, ~5 ms executor run time measured; it was
+    ~77 ms before the package stopped workers re-reading pyspark.zip,
+    SCALING.md "Python task fixed cost") is pure overhead; the reference's
     applier is exactly one JVM-local worker too (its
     pipeline/CDCStreamPipeline.scala mapAsync(1) stage). Row order is
     preserved (collect concatenates partitions in order, each sorted
