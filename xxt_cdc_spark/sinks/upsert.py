@@ -14,9 +14,10 @@ Parity targets:
   jitter capped at 30 s, circuit breaker Closed/Open/HalfOpen.
 
 Execution model: ``apply_batch`` runs inside ``foreachBatch``. The
-batch is LWW-collapsed, hash-routed (same-key → same-partition, R1)
-and each partition drives one writer with one connection — the Spark
-equivalent of the reference's 64-partition × serial-apply pipeline.
+batch is hash-routed (same-key → same-partition, R1) and LWW-collapsed
+through one exchange, and each partition drives one writer with one
+connection — the Spark equivalent of the reference's 64-partition ×
+serial-apply pipeline.
 Failed statements go to a dead-letter list (returned, and optionally
 persisted) instead of being silently skipped (improves on the
 reference, whose README admits failed events may be dropped).
@@ -764,9 +765,10 @@ class JdbcUpsertWriter:
 
     def apply_rows(self, rows) -> dict:
         """Apply an iterator of envelope-ish rows (needs ``op`` plus the
-        payload columns). Rows arrive in binlog order (route() sorted
-        them); flushes preserve that order: a flush happens whenever the
-        pending op kind flips, so delete/upsert interleavings for
+        payload columns), in the order they arrive (``_route_for_apply``
+        sorts by binlog position, or deletes-then-upserts after a
+        collapse); flushes preserve that order: a flush happens whenever
+        the pending op kind flips, so delete/upsert interleavings for
         different keys never reorder."""
         pairs = (
             ("delete", tuple(r[k] for k in self.key_cols))
@@ -1500,6 +1502,38 @@ def _write_dead_letters(writer, dead_letter_dir: str | None) -> None:
             f.write(json.dumps({"kind": kind, "params": list(params), "error": err}, default=str) + "\n")
 
 
+def _route_for_apply(
+    batch_df: DataFrame,
+    num_partitions: int,
+    key_cols: list[str],
+    order_cols: list[str],
+    collapse: bool,
+) -> DataFrame:
+    """Hash-route a batch by key through ONE exchange and order each
+    partition for its serial writer.
+
+    The route's ``repartition(n, keys)`` places key ``k`` in partition
+    ``pmod(murmur3(k), n)`` (``apply_batch_txn``'s ``{pipeline}@{n}``
+    gate identity depends on that mapping); the LWW window then runs on
+    that partitioning, so Spark plans no second exchange for it.
+
+    ``collapse=False`` sorts each partition by binlog position: every
+    event applies, in order. After the collapse every key carries
+    exactly one statement, so statements on distinct keys commute and
+    each partition sorts deletes first, then upserts, each by position:
+    the writer's kind-flip run split sees at most two runs per block
+    (one flush per ``batch_size`` rows of each kind) instead of one per
+    delete/upsert flip. Deletes first is the order ``apply_pdf`` uses
+    after its own collapse, and it never hurts a secondary unique
+    constraint, since a delete only frees values."""
+    routed = batch_df.repartition(num_partitions, *key_cols)
+    if not collapse:
+        return routed.sortWithinPartitions(*order_exprs(order_cols))
+    return last_write_wins(routed, key_cols, order_cols).sortWithinPartitions(
+        F.col("op") != OP_DELETE, *order_exprs(order_cols)
+    )
+
+
 def apply_batch(
     batch_df: DataFrame,
     writer_factory: Callable[[], JdbcUpsertWriter],
@@ -1513,9 +1547,13 @@ def apply_batch(
 ) -> dict:
     """foreachBatch body (O19 apply-worker parity):
 
-    1. LWW-collapse the micro-batch (R5) — at most one statement per key;
-    2. hash-route by key + sort by position (R1/R4);
-    3. one writer per partition applies its slice serially.
+    1. hash-route by key (R1) — the batch's one exchange;
+    2. LWW-collapse on that partitioning (R5) — at most one statement
+       per key;
+    3. sort each partition: deletes, then upserts, after the collapse
+       (two statement groups, as the reference's apply worker groups
+       D/U/I); by position without it (R4);
+    4. one writer per partition applies its slice serially.
 
     Replays after failure are safe: the sink is a PK-upsert (same
     effectively-once argument as the reference, README.md:526-548).
@@ -1524,12 +1562,16 @@ def apply_batch(
     improving on the reference, whose failed events could be silently
     skipped (its README.md:731).
 
-    ``collapse=False`` skips the LWW window (one shuffle fewer): the
-    sorted per-partition writer still applies every key's events in
-    position order, so the converged state is identical — it just
-    executes more statements. The right trade for latency-sensitive
-    small batches with few per-key repeats (the reference applies
-    every event too); keep collapsing for update-heavy replays.
+    ``collapse=False`` skips the LWW window and its sort: the
+    position-sorted per-partition writer still applies every key's
+    events in order, so the converged state is identical — it just
+    executes more statements, and flushes at every delete/upsert flip.
+    The right trade for latency-sensitive small batches with few
+    per-key repeats (the reference applies every event too); keep
+    collapsing for update-heavy replays: on ``perfbench``'s bootstrap
+    catchup the two statement groups cut 36,846 flushes to 16
+    (SCALING.md "Bulk apply: one exchange, two statement groups,
+    Arrow decode").
 
     ``arrow=True`` ships rows to the writer as Arrow blocks
     (``mapInArrow``) instead of per-row pickle — measured ~30% lower
@@ -1601,15 +1643,7 @@ def apply_batch(
             raise ValueError("num_partitions=None (transport-aligned apply) requires collapse=False")
         routed = batch_df.sortWithinPartitions(*order_exprs(order_cols))
     else:
-        # collapse BEFORE the route: the window runs at
-        # shuffle.partitions and pays a second exchange, but Spark's
-        # WindowGroupLimit PARTIAL prunes duplicate-key rows MAP-SIDE
-        # before the first shuffle — a win whenever the batch has many
-        # events per key (the normal changefeed shape; measured 86k vs
-        # 72k ev/s against the one-exchange repartition-first form,
-        # which only wins when keys are ~unique, as in the fanout path).
-        collapsed = last_write_wins(batch_df, key_cols, order_cols) if collapse else batch_df
-        routed = route(collapsed, num_partitions, key_cols, order_cols)
+        routed = _route_for_apply(batch_df, num_partitions, key_cols, order_cols, collapse)
 
     if arrow:
         def _run_arrow(batches):
@@ -1713,8 +1747,7 @@ def apply_batch_txn(
     # collapse would silently drop a key's intermediate history; turn
     # it on only for PK-upsert targets riding the gate for its
     # skip-the-replay economics
-    collapsed = last_write_wins(batch_df, key_cols, order_cols) if collapse else batch_df
-    routed = route(collapsed, num_partitions, key_cols, order_cols)
+    routed = _route_for_apply(batch_df, num_partitions, key_cols, order_cols, collapse)
 
     def _run(rows):
         from pyspark import TaskContext
