@@ -317,7 +317,6 @@ def bench_sink_apply_sharded(spark, n_shards: int = 8) -> dict:
             ["o_orderkey"],
             ["pos_offset"],
             num_partitions=n_shards,
-            arrow=True,
         )
         dt = time.monotonic() - t0
         # convergence check: every live key landed in exactly one shard
@@ -433,7 +432,6 @@ def bench_streaming(spark) -> dict:
                 # collapse=False (applies every event, like the
                 # reference), 2 writers.
                 collapse=driver_holder[0],
-                arrow=not driver_holder[0],
                 driver_apply=driver_holder[0],
             )
 

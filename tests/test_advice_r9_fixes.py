@@ -384,32 +384,6 @@ class TestCacheMissRepoint:
         assert n_b == 100, f"repointed rows must land in the NEW target, got {n_b}"
 
 
-def test_non_arrow_repoint_also_protected(spark, tmp_path):
-    """The non-Arrow fanout dispatch (arrow=False) constructs fresh
-    writers per batch yet shares the same cross-batch pool — the pool
-    fingerprint stamp must protect a repoint there too."""
-    _mk_db(str(tmp_path / "a.db"), 1)
-    _mk_db(str(tmp_path / "b.db"), 1)
-    db_a, db_b = str(tmp_path / "a.db"), str(tmp_path / "b.db")
-    env = _env(spark, 100, 1)
-    try:
-        apply_batch_fanout(
-            env, {"t0": _sink_shared_pool(db_a, "t0", fingerprint=db_a)},
-            num_partitions=2, coalesce_commits=True, arrow=False,
-        )
-        applied = apply_batch_fanout(
-            env, {"t0": _sink_shared_pool(db_b, "t0", fingerprint=db_b)},
-            num_partitions=2, coalesce_commits=True, arrow=False,
-        )
-        assert applied.get("t0") == 100
-    finally:
-        close_pooled_connections()
-    con = sqlite3.connect(db_b)
-    n_b = con.execute("SELECT COUNT(*) FROM t0").fetchone()[0]
-    con.close()
-    assert n_b == 100, f"non-arrow repointed rows must land in db_b, got {n_b}"
-
-
 class TestAcquireTimeReconcile:
     def test_sink_factory_repoint_via_factory_fingerprint(self, spark, tmp_path):
         """The sink_factory posture (whose TableSinks carry no

@@ -92,13 +92,19 @@ class TestUpsertEndToEnd:
         assert _final_state(other) == collapsed_state
 
     def test_arrow_path_converges_identically(self, spark, sf_dir, target_db, tmp_path):
-        """arrow=True (mapInPandas block transfer) must converge to the
-        same state AND report the same applied counts as the row path."""
+        """The distributed Arrow apply must converge to the same state AND
+        report the same applied counts as the writer's row API over the
+        LWW-collapsed rows in position order."""
         cf = orders_changefeed(spark, sf_dir).selectExpr(
             "op", "pos_offset", "o_orderkey", "o_custkey", "o_orderstatus",
             "o_totalprice", "cast(o_orderdate as string) AS o_orderdate", "o_orderpriority",
         )
-        row_stats = apply_batch(cf, _writer_factory(target_db), ["o_orderkey"], ["pos_offset"], 4)
+        last = {}
+        for r in sorted(cf.collect(), key=lambda r: r["pos_offset"]):
+            last[r["o_orderkey"]] = r  # the last event per key wins
+        row_stats = _writer_factory(target_db)().apply_rows(
+            sorted(last.values(), key=lambda r: r["pos_offset"])
+        )
         row_state = _final_state(target_db)
 
         other = str(tmp_path / "ar.db")

@@ -123,24 +123,24 @@ class TestTxnGate:
                 pool_key=key,
                 defer_commit=True,
             )
-            orig = base.apply_rows
+            orig = base.apply_pdf_stream
 
-            def apply_rows(rows):
+            def apply_pdf_stream(frames):
                 import os as _os
                 import time as _time
 
-                rows = list(rows)
-                if rows and not _os.path.exists(marker):
+                frames = list(frames)
+                if frames and not _os.path.exists(marker):
                     from pyspark import TaskContext
 
                     if TaskContext.get().partitionId() == 1:
                         open(marker, "w").close()
                         _time.sleep(2)  # let partition 0 reach its commit
-                        orig(iter(rows))  # statements applied, uncommitted
+                        orig(iter(frames))  # statements applied, uncommitted
                         raise RuntimeError("simulated sink crash before commit")
-                return orig(iter(rows))
+                return orig(iter(frames))
 
-            base.apply_rows = apply_rows
+            base.apply_pdf_stream = apply_pdf_stream
             return base
 
         df = _batch(spark, range(40))

@@ -152,7 +152,6 @@ def run_point(spark, lines: list[str], trigger_ms: int, rate_eps: int, secs: flo
                 ["pos_offset"],
                 num_partitions=None,
                 collapse=True,
-                arrow=False,
                 driver_apply=True,
             )
 

@@ -982,14 +982,10 @@ def cdc_ddl_additive_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 connection_init=["PRAGMA journal_mode=WAL", "PRAGMA synchronous=OFF"],
             )
 
-        # phase 1 rides the VECTORIZED Arrow apply (apply_pdf_stream,
-        # r7) so the driver's oracle row certifies that path end-to-
-        # end; phase 2 keeps the dict-row path — both must converge to
-        # the same oracle state
-        apply_batch(
-            phase1, factory(base_cols), ["o_orderkey"], ["pos_file", "pos_offset"], 2,
-            arrow=True,
-        )
+        # both phases ride the executor Arrow apply (apply_pdf_stream),
+        # so the driver's oracle row certifies that path end-to-end
+        # across the additive DDL
+        apply_batch(phase1, factory(base_cols), ["o_orderkey"], ["pos_file", "pos_offset"], 2)
         actions = [
             handle_ddl(
                 classify_ddl(stmt),

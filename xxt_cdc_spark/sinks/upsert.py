@@ -530,7 +530,7 @@ class JdbcUpsertWriter:
         # defer_commit: leave flushed statements uncommitted on the
         # (pooled) connection; the caller commits once per partition via
         # commit_pooled(). Requires a pool_key — a non-pooled connection
-        # closes on apply_rows exit and would silently roll back.
+        # closes when the apply returns and would silently roll back.
         self.defer_commit = defer_commit
         if defer_commit and pool_key is None:
             raise ValueError("defer_commit requires pool_key (the caller commits the pool)")
@@ -811,11 +811,10 @@ class JdbcUpsertWriter:
     def apply_pdf_stream(self, frames) -> dict:
         """``apply_pdf`` over an ITERATOR of pandas frames (the
         mapInArrow block stream): one connection for the whole
-        partition, each block applied AS IT ARRIVES — the Arrow
-        transfer overlaps the sink writes exactly like the old
-        row-generator path (buffering all blocks first measured a
-        ~20% bulk-throughput loss: transfer and sqlite writes
-        serialized instead of pipelining). Per-key statement order is
+        partition, each block applied AS IT ARRIVES, so the Arrow
+        transfer overlaps the sink writes (buffering all blocks first
+        measured a ~20% bulk-throughput loss: transfer and sqlite
+        writes serialized instead of pipelining). Per-key statement order is
         preserved: blocks arrive in partition order and each block
         flushes in run order."""
         runs = (run for pdf in frames if len(pdf) for run in self._frame_runs(pdf, grouped=False))
@@ -1056,7 +1055,6 @@ def apply_batch_fanout(
     num_partitions: int = 8,
     coalesce_commits: bool = False,
     sink_factory: Callable[[str], TableSink] | None = None,
-    arrow: bool = True,
     route_cols: list[str] | None = None,
     cache_writers: str | None = None,
 ) -> dict[str, int]:
@@ -1073,8 +1071,8 @@ def apply_batch_fanout(
 
     The envelope batch is LWW-collapsed and hash-routed on
     (db, table, key) — same key always lands in the same partition, so
-    per-key order survives — then each partition dispatches its rows to
-    the right table's writer in Python, parsing the JSON row images
+    per-key order survives — then each partition's Arrow blocks dispatch
+    to the right table's writer in Python, parsing the JSON row images
     with ``json.loads``. Trade-off vs the per-table path: row images
     are parsed Python-side (values arrive as json scalars; timestamps
     stay ISO strings, which DB drivers accept), in exchange for a job
@@ -1108,18 +1106,6 @@ def apply_batch_fanout(
     the whole partition transaction and replays the micro-batch —
     strictly stronger atomicity than the per-table-commit default.
 
-    ``arrow=True`` (default) ships each partition's rows to Python as
-    Arrow/pandas blocks (``mapInPandas``) instead of per-row pickled
-    Rows — the Arrow transfer the single-table ``apply_batch(arrow=
-    True)`` path uses (r4 VERDICT wrong-item 1: the fanout hot path was
-    the one place still paying per-row Python deserialization cost).
-    Within a block, rows group by table vectorized (pandas groupby,
-    order-preserving) and only the final dict projection per row stays
-    in Python, exactly like the single-table Arrow path. Identical
-    semantics: blocks preserve in-partition order, keys never span
-    tables, and a table spanning several blocks simply applies in
-    several ordered ``apply_rows`` calls on its one writer.
-
     ``cache_writers`` (a caller-chosen namespace string) reuses each
     table's constructed writer across micro-batches in the worker
     process — at 10k+ tables, fresh per-batch writer construction
@@ -1145,8 +1131,7 @@ def apply_batch_fanout(
     refuses a pooled connection stamped for a DIFFERENT target — the
     stale connection is evicted and the writer reconnects through its
     own ``connect_fn``, so a repointed estate lands in the new target
-    even on cache misses, with ``cache_writers=None``, and on the
-    non-Arrow path. A conflict against a connection holding
+    even on cache misses and with ``cache_writers=None``. A conflict against a connection holding
     uncommitted coalesced rows fails loudly instead (the micro-batch
     replays) — that shape means one batch mapped two targets onto one
     ``pool_key``, which violates the pool contract below.
@@ -1190,295 +1175,238 @@ def apply_batch_fanout(
         ["pos_file", "pos_offset"],
     )
 
-    if arrow:
-        import pandas as pd
+    import pandas as pd
 
-        def _s(v):
-            # Arrow→pandas nulls surface as None (object dtype); guard
-            # against anything non-str (e.g. NaN) reaching json.loads
-            return v if isinstance(v, str) and v else None
+    def _s(v):
+        # Arrow→pandas nulls surface as None (object dtype); guard
+        # against anything non-str (e.g. NaN) reaching json.loads
+        return v if isinstance(v, str) and v else None
 
-        def _run_blocks(blocks):
-            # Dispatch shape (r7, third iteration — every change below
-            # measured on the 10k-table fanout bench):
-            # 1. ONE concat per partition, then a VECTORIZED LWW
-            #    collapse (drop_duplicates(keep="last") — rows arrive
-            #    position-sorted, so last-kept per (table, key) IS the
-            #    old window's row_number()=1). Keyless rows bypass the
-            #    collapse untouched.
-            # 2. One itertuples pass over the SURVIVORS builds the
-            #    statement param tuples directly — no per-row dict
-            #    projection, no dict-of-dicts, no re-iteration in
-            #    apply_rows (apply_param_groups consumes the tuples
-            #    as-is; group order across keys is free post-collapse).
-            # Rejected shapes from earlier rounds still apply: a
-            # per-block apply double-counts tables spanning Arrow
-            # blocks (writer stats are cumulative), and a pandas
-            # per-table groupby pays per-group slicing that HALVES
-            # throughput at 10 rows/table.
-            frames = list(blocks)
-            if not frames:
-                yield pd.DataFrame({"table": [], "applied": []})
-                return
-            pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-            keyed = pdf["key"].notna() & (pdf["key"] != "")
-            # Tables carrying keyless rows must apply ORDER-PRESERVING:
-            # a keyless row can hold several statements for one
-            # underlying row, so the two-group apply_param_groups
-            # (all deletes, then all upserts) would flip an
-            # insert-then-delete into delete-then-insert and resurrect
-            # the row (r7 advice). Those tables route through
-            # apply_ordered_params (kind-flip flushes in frame order);
-            # fully-keyed tables keep the cheap two-group path.
-            keyless_tables: set[str] = (
-                set() if bool(keyed.all()) else set(pdf.loc[~keyed, "table"])
-            )
-            if bool(keyed.all()):
-                pdf = pdf.drop_duplicates(["table", "key"], keep="last")
-            elif bool(keyed.any()):
-                pdf = pd.concat(
-                    [pdf[keyed].drop_duplicates(["table", "key"], keep="last"), pdf[~keyed]]
-                ).sort_index(kind="stable")
-            writers: dict[str, object] = {}
-            ups: dict[str, list] = {}
-            dels: dict[str, list] = {}
-            seq: dict[str, list] = {}
-            base: dict[str, int] = {}
-            skipped: set[str] = set()
-            deferred_keys: set[str] = set()
-            for t, op, key, before, after in pdf[
-                ["table", "op", "key", "before", "after"]
-            ].itertuples(index=False, name=None):
-                writer = writers.get(t)
-                if writer is None:
-                    if t in skipped:
-                        continue  # unregistered table: skip, as ever
-                    sink = None
-                    if cache_writers is not None:
-                        writer = _writer_cache_get(cache_ns, t)
-                        if writer is not None and sinks is not None:
-                            # re-validate every hit against the CURRENT
-                            # registry (r8 ADVICE): a table removed from
-                            # ``sinks`` must stop applying, and one
-                            # re-registered with different key columns
-                            # or a different config fingerprint must
-                            # evict + rebuild, not reuse the old target.
-                            sink = sinks.get(t)
-                            if (
-                                sink is None
-                                or list(sink.key_cols) != list(writer.key_cols)
-                                or getattr(sink, "fingerprint", None)
-                                != getattr(writer, "_cache_fingerprint", None)
-                            ):
-                                # evict the WRITER only: the pooled
-                                # connection is handled by the rebuilt
-                                # writer's acquire-time fingerprint
-                                # reconcile (a direct pool evict here
-                                # could race a sibling partition that
-                                # already re-pooled the NEW target's
-                                # connection — r10 review)
-                                _writer_cache_evict(cache_ns, t, writer)
-                                if (
-                                    sink is not None
-                                    and writer.pool_key is not None
-                                    and getattr(sink, "fingerprint", None) is None
-                                    and getattr(writer, "_cache_fingerprint", None)
-                                    is not None
-                                ):
-                                    # drift TO a fingerprint-LESS
-                                    # registration: the rebuilt writer
-                                    # will carry no fingerprint, so the
-                                    # acquire-time reconcile cannot
-                                    # protect it — drop the OLD
-                                    # target's connection, stamp-
-                                    # matched so a sibling's freshly
-                                    # re-pooled (unstamped) connection
-                                    # is never popped (r10 review)
-                                    _evict_stale_target(
-                                        writer.pool_key,
-                                        getattr(writer, "_cache_fingerprint", None),
-                                    )
-                                writer = None
-                                if sink is None:
-                                    skipped.add(t)
-                                    continue
-                    if writer is None:
-                        if sink is None:
-                            if sinks is not None:
-                                if t not in sinks:
-                                    skipped.add(t)
-                                    continue
-                                sink = sinks[t]
-                            else:
-                                sink = sink_factory(t)
-                        writer = sink.writer_factory()
-                        # target identity for the acquire-time pool
-                        # reconcile (r10): sink-level fingerprint, with
-                        # the factory-level one as fallback so the
-                        # sink_factory posture (whose TableSinks often
-                        # carry none) is protected too.
-                        # CONTRACT (r10 ADVICE): both sources stamp the
-                        # same _POOL_FPS namespace, so when sinks that
-                        # SHARE a pool_key mix the two (one carries a
-                        # sink.fingerprint, a sibling falls back to
-                        # factory_fp), the two strings must be EQUAL —
-                        # different spellings of one physical target
-                        # (e.g. JDBC URL vs config hash) read as a
-                        # two-targets conflict at acquire (evict
-                        # thrash, or the dirty raise). Single-target
-                        # callers should set exactly one of the two;
-                        # per-sink-target callers must embed the target
-                        # in pool_key anyway, which keeps namespaces
-                        # disjoint.
-                        sink_fp = getattr(sink, "fingerprint", None)
-                        writer._target_fingerprint = (
-                            sink_fp if sink_fp is not None else factory_fp
-                        )
-                        if cache_writers is not None and writer.pool_key is not None:
-                            writer._cache_fingerprint = sink_fp
-                            _writer_cache_put(cache_ns, t, writer)
-                    # reconcile per-CALL commit posture on cached AND
-                    # fresh writers: a writer cached by a coalescing
-                    # batch must not keep deferring when a later batch
-                    # runs uncoalesced (its statements would sit
-                    # uncommitted on the pooled connection — data loss)
-                    writer.defer_commit = bool(
-                        coalesce_commits and writer.pool_key is not None
-                    )
-                    if writer.defer_commit:
-                        deferred_keys.add(writer.pool_key)
-                    writers[t] = writer
-                    # delta-accounted applied counts: a cached writer's
-                    # stats are cumulative across batches
-                    base[t] = writer.stats["upserts"] + writer.stats["deletes"]
-                    ups[t] = []
-                    dels[t] = []
-                    if t in keyless_tables:
-                        seq[t] = []
-                if op == OP_DELETE:
-                    k = _s(key)
-                    src = json.loads(k) if k else {}
-                    b = _s(before)
-                    if b:
-                        src = {**json.loads(b), **src}
-                    p = tuple(src.get(c) for c in writer.key_cols)
-                    if t in keyless_tables:
-                        seq[t].append(("delete", p))
-                    else:
-                        dels[t].append(p)
-                else:
-                    a = _s(after)
-                    src = json.loads(a) if a else {}
-                    p = tuple(src.get(c) for c in writer.columns)
-                    if t in keyless_tables:
-                        seq[t].append(("upsert", p))
-                    else:
-                        ups[t].append(p)
-            applied_local: dict[str, int] = {}
-            for t, writer in writers.items():
-                if t in keyless_tables:
-                    stats = writer.apply_ordered_params(seq[t])
-                else:
-                    stats = writer.apply_param_groups(ups[t], dels[t])
-                applied_local[t] = stats["upserts"] + stats["deletes"] - base[t]
-                # a CACHED writer outlives the batch — cap its retained
-                # dead letters so failures can't grow memory unbounded
-                # across micro-batches (r8 ADVICE); most recent kept.
-                # Only writers actually PLACED in the cache (pooled —
-                # the _writer_cache_put condition): a fresh unpooled
-                # writer dies with the batch and its dead letters belong
-                # to the caller (r9 ADVICE).
-                if cache_writers is not None and writer.pool_key is not None:
-                    _trim_cached_dead_letters(writer)
-            if deferred_keys:
-                commit_pooled(deferred_keys)
-            yield pd.DataFrame(
-                {"table": list(applied_local), "applied": list(applied_local.values())}
-            )
-
-        applied_arrow: dict[str, int] = {}
-        # project to the five columns the dispatch reads AFTER the
-        # route's in-partition sort: the Arrow transfer drops
-        # db/ts/gtid/pos_* (~40% of envelope bytes) and the projection
-        # adds no exchange, so partition order survives
-        dispatch_cols = routed.select("table", "op", "key", "before", "after")
-        for r in dispatch_cols.mapInPandas(
-            _run_blocks, "table string, applied long"
-        ).collect():
-            applied_arrow[r["table"]] = applied_arrow.get(r["table"], 0) + r["applied"]
-        return applied_arrow
-
-    def _run(rows):
-        # group per table, preserving in-partition (binlog) order; keys
-        # never span tables so per-key order is intact inside each group.
-        # LWW-collapsed per (table, key) exactly like the Arrow path —
-        # rows arrive position-sorted, so the last row per key wins.
-        local_sinks: dict[str, TableSink] = {}
-        by_table: dict[str, dict] = {}
-        uniq = 0
-        for row in rows:
-            t = row["table"]
-            if t not in local_sinks:
-                if sinks is not None:
-                    if t not in sinks:
-                        continue  # unregistered table: skip, like the dict path always did
-                    local_sinks[t] = sinks[t]
-                else:
-                    local_sinks[t] = sink_factory(t)
-            k = row["key"]
-            if not k:
-                uniq += 1
-                k = uniq
-            by_table.setdefault(t, {})[k] = row
+    def _run_blocks(blocks):
+        # Dispatch shape (r7, third iteration — every change below
+        # measured on the 10k-table fanout bench):
+        # 1. ONE concat per partition, then a VECTORIZED LWW
+        #    collapse (drop_duplicates(keep="last") — rows arrive
+        #    position-sorted, so last-kept per (table, key) IS the
+        #    old window's row_number()=1). Keyless rows bypass the
+        #    collapse untouched.
+        # 2. One itertuples pass over the SURVIVORS builds the
+        #    statement param tuples directly — no per-row dict
+        #    projection, no dict-of-dicts, no re-iteration in
+        #    apply_rows (apply_param_groups consumes the tuples
+        #    as-is; group order across keys is free post-collapse).
+        # Rejected shapes from earlier rounds still apply: a
+        # per-block apply double-counts tables spanning Arrow
+        # blocks (writer stats are cumulative), and a pandas
+        # per-table groupby pays per-group slicing that HALVES
+        # throughput at 10 rows/table.
+        frames = list(blocks)
+        if not frames:
+            yield pd.DataFrame({"table": [], "applied": []})
+            return
+        pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+        keyed = pdf["key"].notna() & (pdf["key"] != "")
+        # Tables carrying keyless rows must apply ORDER-PRESERVING:
+        # a keyless row can hold several statements for one
+        # underlying row, so the two-group apply_param_groups
+        # (all deletes, then all upserts) would flip an
+        # insert-then-delete into delete-then-insert and resurrect
+        # the row (r7 advice). Those tables route through
+        # apply_ordered_params (kind-flip flushes in frame order);
+        # fully-keyed tables keep the cheap two-group path.
+        keyless_tables: set[str] = (
+            set() if bool(keyed.all()) else set(pdf.loc[~keyed, "table"])
+        )
+        if bool(keyed.all()):
+            pdf = pdf.drop_duplicates(["table", "key"], keep="last")
+        elif bool(keyed.any()):
+            pdf = pd.concat(
+                [pdf[keyed].drop_duplicates(["table", "key"], keep="last"), pdf[~keyed]]
+            ).sort_index(kind="stable")
+        writers: dict[str, object] = {}
+        ups: dict[str, list] = {}
+        dels: dict[str, list] = {}
+        seq: dict[str, list] = {}
+        base: dict[str, int] = {}
+        skipped: set[str] = set()
         deferred_keys: set[str] = set()
-        for table, trows in by_table.items():
-            sink = local_sinks[table]
-            writer = sink.writer_factory()
-            # same repoint guard as the Arrow path, enforced at the
-            # writer's own acquire (r10): the pool outlives batches, so
-            # a fresh writer after the estate repointed would otherwise
-            # borrow the stale connection
-            _fp = getattr(sink, "fingerprint", None)
-            writer._target_fingerprint = _fp if _fp is not None else factory_fp
-            if coalesce_commits and writer.pool_key is not None:
-                writer.defer_commit = True
-                deferred_keys.add(writer.pool_key)
-            dicts = []
-            for row in trows.values():
-                if row["op"] == OP_DELETE:
-                    # pk values live in the key JSON (before image may be
-                    # minimal or absent)
-                    src = json.loads(row["key"]) if row["key"] else {}
-                    if row["before"]:
-                        src = {**json.loads(row["before"]), **src}
+        for t, op, key, before, after in pdf[
+            ["table", "op", "key", "before", "after"]
+        ].itertuples(index=False, name=None):
+            writer = writers.get(t)
+            if writer is None:
+                if t in skipped:
+                    continue  # unregistered table: skip, as ever
+                sink = None
+                if cache_writers is not None:
+                    writer = _writer_cache_get(cache_ns, t)
+                    if writer is not None and sinks is not None:
+                        # re-validate every hit against the CURRENT
+                        # registry (r8 ADVICE): a table removed from
+                        # ``sinks`` must stop applying, and one
+                        # re-registered with different key columns
+                        # or a different config fingerprint must
+                        # evict + rebuild, not reuse the old target.
+                        sink = sinks.get(t)
+                        if (
+                            sink is None
+                            or list(sink.key_cols) != list(writer.key_cols)
+                            or getattr(sink, "fingerprint", None)
+                            != getattr(writer, "_cache_fingerprint", None)
+                        ):
+                            # evict the WRITER only: the pooled
+                            # connection is handled by the rebuilt
+                            # writer's acquire-time fingerprint
+                            # reconcile (a direct pool evict here
+                            # could race a sibling partition that
+                            # already re-pooled the NEW target's
+                            # connection — r10 review)
+                            _writer_cache_evict(cache_ns, t, writer)
+                            if (
+                                sink is not None
+                                and writer.pool_key is not None
+                                and getattr(sink, "fingerprint", None) is None
+                                and getattr(writer, "_cache_fingerprint", None)
+                                is not None
+                            ):
+                                # drift TO a fingerprint-LESS
+                                # registration: the rebuilt writer
+                                # will carry no fingerprint, so the
+                                # acquire-time reconcile cannot
+                                # protect it — drop the OLD
+                                # target's connection, stamp-
+                                # matched so a sibling's freshly
+                                # re-pooled (unstamped) connection
+                                # is never popped (r10 review)
+                                _evict_stale_target(
+                                    writer.pool_key,
+                                    getattr(writer, "_cache_fingerprint", None),
+                                )
+                            writer = None
+                            if sink is None:
+                                skipped.add(t)
+                                continue
+                if writer is None:
+                    if sink is None:
+                        if sinks is not None:
+                            if t not in sinks:
+                                skipped.add(t)
+                                continue
+                            sink = sinks[t]
+                        else:
+                            sink = sink_factory(t)
+                    writer = sink.writer_factory()
+                    # target identity for the acquire-time pool
+                    # reconcile (r10): sink-level fingerprint, with
+                    # the factory-level one as fallback so the
+                    # sink_factory posture (whose TableSinks often
+                    # carry none) is protected too.
+                    # CONTRACT (r10 ADVICE): both sources stamp the
+                    # same _POOL_FPS namespace, so when sinks that
+                    # SHARE a pool_key mix the two (one carries a
+                    # sink.fingerprint, a sibling falls back to
+                    # factory_fp), the two strings must be EQUAL —
+                    # different spellings of one physical target
+                    # (e.g. JDBC URL vs config hash) read as a
+                    # two-targets conflict at acquire (evict
+                    # thrash, or the dirty raise). Single-target
+                    # callers should set exactly one of the two;
+                    # per-sink-target callers must embed the target
+                    # in pool_key anyway, which keeps namespaces
+                    # disjoint.
+                    sink_fp = getattr(sink, "fingerprint", None)
+                    writer._target_fingerprint = (
+                        sink_fp if sink_fp is not None else factory_fp
+                    )
+                    if cache_writers is not None and writer.pool_key is not None:
+                        writer._cache_fingerprint = sink_fp
+                        _writer_cache_put(cache_ns, t, writer)
+                # reconcile per-CALL commit posture on cached AND
+                # fresh writers: a writer cached by a coalescing
+                # batch must not keep deferring when a later batch
+                # runs uncoalesced (its statements would sit
+                # uncommitted on the pooled connection — data loss)
+                writer.defer_commit = bool(
+                    coalesce_commits and writer.pool_key is not None
+                )
+                if writer.defer_commit:
+                    deferred_keys.add(writer.pool_key)
+                writers[t] = writer
+                # delta-accounted applied counts: a cached writer's
+                # stats are cumulative across batches
+                base[t] = writer.stats["upserts"] + writer.stats["deletes"]
+                ups[t] = []
+                dels[t] = []
+                if t in keyless_tables:
+                    seq[t] = []
+            if op == OP_DELETE:
+                k = _s(key)
+                src = json.loads(k) if k else {}
+                b = _s(before)
+                if b:
+                    src = {**json.loads(b), **src}
+                p = tuple(src.get(c) for c in writer.key_cols)
+                if t in keyless_tables:
+                    seq[t].append(("delete", p))
                 else:
-                    src = json.loads(row["after"]) if row["after"] else {}
-                d = {c: src.get(c) for c in writer.columns}
-                d["op"] = row["op"]
-                dicts.append(d)
-            stats = writer.apply_rows(dicts)
-            yield (table, stats["upserts"] + stats["deletes"])
+                    dels[t].append(p)
+            else:
+                a = _s(after)
+                src = json.loads(a) if a else {}
+                p = tuple(src.get(c) for c in writer.columns)
+                if t in keyless_tables:
+                    seq[t].append(("upsert", p))
+                else:
+                    ups[t].append(p)
+        applied_local: dict[str, int] = {}
+        for t, writer in writers.items():
+            if t in keyless_tables:
+                stats = writer.apply_ordered_params(seq[t])
+            else:
+                stats = writer.apply_param_groups(ups[t], dels[t])
+            applied_local[t] = stats["upserts"] + stats["deletes"] - base[t]
+            # a CACHED writer outlives the batch — cap its retained
+            # dead letters so failures can't grow memory unbounded
+            # across micro-batches (r8 ADVICE); most recent kept.
+            # Only writers actually PLACED in the cache (pooled —
+            # the _writer_cache_put condition): a fresh unpooled
+            # writer dies with the batch and its dead letters belong
+            # to the caller (r9 ADVICE).
+            if cache_writers is not None and writer.pool_key is not None:
+                _trim_cached_dead_letters(writer)
         if deferred_keys:
             commit_pooled(deferred_keys)
+        yield pd.DataFrame(
+            {"table": list(applied_local), "applied": list(applied_local.values())}
+        )
 
     applied: dict[str, int] = {}
-    for table, n in routed.rdd.mapPartitions(_run).collect():
-        applied[table] = applied.get(table, 0) + n
+    # project to the five columns the dispatch reads AFTER the
+    # route's in-partition sort: the Arrow transfer drops
+    # db/ts/gtid/pos_* (~40% of envelope bytes) and the projection
+    # adds no exchange, so partition order survives
+    dispatch_cols = routed.select("table", "op", "key", "before", "after")
+    for r in dispatch_cols.mapInPandas(_run_blocks, "table string, applied long").collect():
+        applied[r["table"]] = applied.get(r["table"], 0) + r["applied"]
     return applied
 
 
 def _arrow_to_frame(batch):
     """Arrow table or record batch → the pandas frame the vectorized
-    writer binds from. Both Arrow apply paths (executor ``mapInArrow``
-    blocks and the driver ``toArrow`` collect) convert here, so they
-    bind what the row path binds:
+    writer binds from. The executor ``mapInArrow`` blocks and the
+    driver ``toArrow`` collect both convert here, and bind what
+    ``apply_rows`` binds for the same values:
 
     - ``integer_object_nulls`` keeps a nullable BIGINT as Python ints
       and None (the default float64 upcast rounds values past 2**53);
+    - a null DOUBLE/FLOAT binds as None, not NaN (MySQL drivers reject
+      NaN); only a column that holds a null pays the object conversion;
     - a tz-aware timestamp column drops its zone, keeping the wall
-      clock in its own zone (the session zone Spark stamps), and
+      clock in its own zone (the session zone Spark stamps, so the
+      value matches Spark SQL's rendering on any host zone), and
       arrives as naive ``datetime`` objects — DB-API drivers bind
       those, not pandas ``Timestamp`` (sqlite3 rejects it)."""
+    import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -1487,7 +1415,11 @@ def _arrow_to_frame(batch):
         for c in batch.columns
     ]
     batch = type(batch).from_arrays(cols, names=batch.schema.names)
-    return batch.to_pandas(integer_object_nulls=True, date_as_object=True, timestamp_as_object=True)
+    pdf = batch.to_pandas(integer_object_nulls=True, date_as_object=True, timestamp_as_object=True)
+    for name, c in zip(batch.schema.names, cols):
+        if pa.types.is_floating(c.type) and c.null_count:
+            pdf[name] = pd.Series(c.to_pylist(), dtype=object)
+    return pdf
 
 
 def _write_dead_letters(writer, dead_letter_dir: str | None) -> None:
@@ -1534,6 +1466,27 @@ def _route_for_apply(
     )
 
 
+def _apply_partitions(routed: DataFrame, apply_frames, keys=_STAT_KEYS) -> dict:
+    """Run ``apply_frames`` once per partition of ``routed`` and sum the
+    stats dicts it returns over ``keys``.
+
+    ``apply_frames`` receives the partition's ``mapInArrow`` blocks,
+    each converted by ``_arrow_to_frame``, lazily and in partition
+    order (see ``apply_pdf_stream``). The stats come back with the same
+    job: callers get applied counts without a ``count()`` action over
+    the batch. ``mapInArrow``, not ``mapInPandas``: the latter turns a
+    nullable BIGINT into float64."""
+
+    def _task(batches):
+        import pyarrow as pa
+
+        stats = apply_frames(_arrow_to_frame(b) for b in batches)
+        yield pa.RecordBatch.from_pylist([{k: stats[k] for k in keys}])
+
+    parts = routed.mapInArrow(_task, ", ".join(f"{k} long" for k in keys)).collect()
+    return {k: sum(p[k] for p in parts) for k in keys}
+
+
 def apply_batch(
     batch_df: DataFrame,
     writer_factory: Callable[[], JdbcUpsertWriter],
@@ -1542,7 +1495,7 @@ def apply_batch(
     num_partitions: int | None = 8,
     dead_letter_dir: str | None = None,
     collapse: bool = True,
-    arrow: bool = False,
+    arrow: bool = True,
     driver_apply: bool = False,
 ) -> dict:
     """foreachBatch body (O19 apply-worker parity):
@@ -1573,13 +1526,10 @@ def apply_batch(
     (SCALING.md "Bulk apply: one exchange, two statement groups,
     Arrow decode").
 
-    ``arrow=True`` ships rows to the writer as Arrow blocks
-    (``mapInArrow``) instead of per-row pickle — measured ~30% lower
-    micro-batch latency and ~40% higher apply throughput on the bench's
-    streaming phase. Identical semantics: the block iterator preserves
-    in-partition order, and each block converts through
-    ``_arrow_to_frame`` so the writer binds the same values as the row
-    path.
+    Every path ships rows to the writer as Arrow blocks and binds them
+    through ``_arrow_to_frame``. ``arrow`` selects nothing: it stays for
+    callers that pass ``arrow=True``, and ``arrow=False`` (the removed
+    pickled-Row executor path) raises ``ValueError``.
 
     ``num_partitions=None`` skips the hash-route shuffle entirely and
     applies on the SOURCE partitioning (in-partition position sort
@@ -1612,6 +1562,11 @@ def apply_batch(
     driver collect of a multi-million-row batch is the anti-pattern
     everywhere else in this engine.
     """
+    if not arrow:
+        raise ValueError(
+            "apply_batch(arrow=False): the pickled-Row executor path was removed; "
+            "every apply ships Arrow blocks"
+        )
     order_cols = order_cols or ["pos_file", "pos_offset"]
     if driver_apply and num_partitions is not None:
         raise ValueError(
@@ -1645,36 +1600,13 @@ def apply_batch(
     else:
         routed = _route_for_apply(batch_df, num_partitions, key_cols, order_cols, collapse)
 
-    if arrow:
-        def _run_arrow(batches):
-            # vectorized per-block apply on ONE connection, consuming
-            # the Arrow stream AS IT ARRIVES — transfer overlaps the
-            # sink writes (buffering all blocks first measured a ~20%
-            # bulk-throughput loss); no per-row dict/projection Python
-            # (r6 verdict item 2). mapInArrow, not mapInPandas, so the
-            # blocks convert through _arrow_to_frame like the driver
-            # path (mapInPandas turns a nullable BIGINT into float64)
-            import pyarrow as pa
+    def _run(frames):
+        writer = writer_factory()
+        stats = writer.apply_pdf_stream(frames)
+        _write_dead_letters(writer, dead_letter_dir)
+        return stats
 
-            writer = writer_factory()
-            stats = writer.apply_pdf_stream(_arrow_to_frame(b) for b in batches)
-            _write_dead_letters(writer, dead_letter_dir)
-            yield pa.RecordBatch.from_pylist([{k: stats[k] for k in _STAT_KEYS}])
-
-        schema = ", ".join(f"{k} long" for k in _STAT_KEYS)
-        parts = routed.mapInArrow(_run_arrow, schema).collect()
-    else:
-        def _run(rows):
-            writer = writer_factory()
-            stats = writer.apply_rows(rows)
-            _write_dead_letters(writer, dead_letter_dir)
-            yield stats
-
-        # mapPartitions (not foreachPartition) so the writers' own
-        # counters come back with the SAME job — callers get applied
-        # counts without any extra count() action over the batch
-        parts = routed.rdd.mapPartitions(_run).collect()
-    return {k: sum(p[k] for p in parts) for k in _STAT_KEYS}
+    return _apply_partitions(routed, _run)
 
 
 # --- exactly-once for NON-idempotent sinks (transactional offsets) -----------
@@ -1712,7 +1644,7 @@ def apply_batch_txn(
     hit the gate. No idempotence assumption anywhere.
 
     ``writer_factory`` must produce pooled, defer-commit writers (the
-    transaction needs one connection that outlives apply_rows).
+    transaction needs one connection that outlives the apply).
     The gate table is created (and committed) BEFORE the data
     transaction opens — MySQL DDL auto-commits, so in-transaction
     creation would tear the atomicity; pre-create it in production.
@@ -1749,7 +1681,7 @@ def apply_batch_txn(
     # skip-the-replay economics
     routed = _route_for_apply(batch_df, num_partitions, key_cols, order_cols, collapse)
 
-    def _run(rows):
+    def _run(frames):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
@@ -1794,12 +1726,11 @@ def apply_batch_txn(
             )
             row = cur.fetchone()
             if row is not None and row[0] is not None and row[0] >= batch_id:
-                yield {**dict.fromkeys(_STAT_KEYS, 0), "skipped": 1}
-                return
+                return {**dict.fromkeys(_STAT_KEYS, 0), "skipped": 1}
 
             # the slice's statements stay uncommitted (defer_commit);
-            # apply_rows re-borrows this same pooled connection
-            stats = writer.apply_rows(rows)
+            # apply_pdf_stream re-borrows this same pooled connection
+            stats = writer.apply_pdf_stream(frames)
             # prune superseded gate rows (same txn), then INSERT this
             # batch's row: a racing twin that also passed the pre-read
             # fails HERE on the PK and rolls back its data with it
@@ -1826,7 +1757,6 @@ def apply_batch_txn(
             # _POOL_LOCK access — this closure cloudpickles by value
             # and a captured lock is unpicklable.
             _clear_dirty_if_unchanged(writer.pool_key, _gen)
-            yield {**stats, "skipped": 0}
+            return {**stats, "skipped": 0}
 
-    parts = routed.rdd.mapPartitions(_run).collect()
-    return {k: sum(p[k] for p in parts) for k in (*_STAT_KEYS, "skipped")}
+    return _apply_partitions(routed, _run, (*_STAT_KEYS, "skipped"))

@@ -262,8 +262,8 @@ def low_latency_apply_fn(
     386/421 for the r6 executor-path shape (bench.py stream phase;
     SCALING.md round-7). Correct for transport-aligned batches only —
     a single-partition file trigger or a PK-keyed Kafka topic; use a
-    distributed ``apply_batch(..., num_partitions=N, arrow=True)``
-    body for bulk/catchup throughput.
+    distributed ``apply_batch(..., num_partitions=N)`` body for
+    bulk/catchup throughput.
 
     Usage::
 
