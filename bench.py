@@ -516,7 +516,7 @@ def bench_streaming(spark) -> dict:
             con.close()
             # warm the BULK plan shape before timing it: the latency
             # pass warms only the driver-apply plan (no route exchange,
-            # no mapInPandas), so the distributed bulk plan would
+            # no mapInArrow), so the distributed bulk plan would
             # otherwise compile codegen inside the timed window
             # (measured: batch-0 addBatch 2.9 s vs 0.65 s steady —
             # ~35% of a 4-batch phase)

@@ -4,8 +4,8 @@ entry point is one call.
 - The executor Arrow path (``apply_batch``) and the driver Arrow path
   (``driver_apply=True``) must land the same target as the writer's
   row API (``apply_rows``) over the same rows in position order. A
-  nullable BIGINT past 2**53 must survive the Arrow→pandas conversion
-  (a float64 upcast rounds it), a null DOUBLE must bind as None, not
+  nullable BIGINT past 2**53 must bind exactly (a float64 upcast
+  rounds it), a null DOUBLE must bind as None, not
   NaN, and a TIMESTAMP must bind as the naive ``datetime`` in the
   session zone, whatever the host's zone.
 - A public ``apply_*`` never calls another public ``apply_*`` through
@@ -25,6 +25,7 @@ import sys
 import textwrap
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from xxt_cdc_spark.sinks.upsert import JdbcUpsertWriter, apply_batch
@@ -242,7 +243,7 @@ class _CountingWriter(JdbcUpsertWriter):
 
 class TestEntryPointsDoNotNest:
     def _frame(self, ops_keys):
-        return pd.DataFrame(
+        pdf = pd.DataFrame(
             {
                 "op": [op for op, _ in ops_keys],
                 "k": [k for _, k in ops_keys],
@@ -250,6 +251,7 @@ class TestEntryPointsDoNotNest:
                 "ts": [None] * len(ops_keys),
             }
         )
+        return pa.Table.from_pandas(pdf, preserve_index=False)
 
     def test_each_public_apply_is_one_entry(self, tmp_path):
         db = str(tmp_path / "t.db")

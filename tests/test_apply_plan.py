@@ -9,6 +9,9 @@
   across keys reaches the writer as at most two runs per Arrow block,
   and at most two flushes per ``batch_size`` rows, where position
   order flushed at almost every kind flip.
+- Without the collapse a block applies in key waves: at most two
+  flushes per wave (a block's largest per-key count), where position
+  order flushed at every delete/upsert flip.
 - The converged target and the statement counts do not depend on the
   apply path.
 """
@@ -49,9 +52,10 @@ def _target(path: str) -> list[tuple]:
 
 
 def _counting_factory(path: str, log_dir: str, batch_size: int, **kw):
-    """Writers that log each Arrow block ("B") and each ``_flush``
-    ("F <rows>") to a file of their own, so executor-side counts reach
-    the test. The class is local, so it pickles by value."""
+    """Writers that log each Arrow block ("B <largest per-key count>")
+    and each ``_flush`` ("F <rows>") to a file of their own, so
+    executor-side counts reach the test. The class is local, so it
+    pickles by value."""
 
     def make():
         log_path = os.path.join(log_dir, f"w-{uuid.uuid4().hex}.log")
@@ -59,10 +63,14 @@ def _counting_factory(path: str, log_dir: str, batch_size: int, **kw):
         class FlushCounter(JdbcUpsertWriter):
             log = log_path
 
-            def _frame_runs(self, pdf, grouped):
+            def _block_runs(self, block):
+                import pyarrow.compute as pc
+
+                # the block marker carries the block's largest per-key count
+                top = pc.max(pc.value_counts(block.column("k")).field("counts")).as_py()
                 with open(self.log, "a") as f:
-                    f.write("B\n")
-                yield from super()._frame_runs(pdf, grouped)
+                    f.write(f"B {top}\n")
+                yield from super()._block_runs(block)
 
             def _flush(self, conn, kind, params):
                 with open(self.log, "a") as f:
@@ -232,3 +240,55 @@ class TestConvergence:
             want = (N_KEYS // 2, N_KEYS // 2) if collapsed else (N_KEYS, N_KEYS // 2)
             assert (stats["upserts"], stats["deletes"], stats["failures"]) == (*want, 0), name
             assert _target(db) == EXPECTED, name
+
+
+def _blocks(logs: list[list[str]]) -> list[tuple[int, int, int]]:
+    """(largest per-key count, flushes, flushed rows) per Arrow block."""
+    out = []
+    for log in logs:
+        for ln in log:
+            if ln.startswith("B"):
+                out.append([int(ln[2:]), 0, 0])
+            else:
+                out[-1][1] += 1
+                out[-1][2] += int(ln[2:])
+    return [tuple(b) for b in out]
+
+
+class TestKeyWaves:
+    """Without the collapse only statements on one key keep their
+    order: a block applies in key waves, at most two flushes (deletes,
+    then upserts) per wave, where position order flushed at every
+    delete/upsert flip (2,000 flushes for this batch's 3,000 events)."""
+
+    @pytest.mark.parametrize(
+        "kw, block_rows",
+        [
+            (dict(num_partitions=2), None),
+            (dict(num_partitions=2), "256"),
+            (dict(num_partitions=None, driver_apply=True), None),
+        ],
+        ids=["executor", "executor-256-row-blocks", "driver"],
+    )
+    def test_uncollapsed_apply_flushes_twice_per_key_wave(self, spark, tmp_path, kw, block_rows):
+        db = str(tmp_path / "t.db")
+        _make_target(db)
+        log_dir = str(tmp_path / "logs")
+        os.makedirs(log_dir)
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(conf)
+        if block_rows:
+            spark.conf.set(conf, block_rows)
+        try:
+            stats = apply_batch(
+                _alternating_batch(spark), _counting_factory(db, log_dir, 5000), ["k"],
+                collapse=False, **kw,
+            )
+        finally:
+            spark.conf.set(conf, old)
+        blocks = _blocks(_writer_logs(log_dir))
+        assert sum(rows for _, _, rows in blocks) == N_KEYS + N_KEYS // 2
+        for top, flushes, _ in blocks:
+            assert flushes <= 2 * top, (top, flushes)
+        assert (stats["upserts"], stats["deletes"]) == (N_KEYS, N_KEYS // 2)
+        assert _target(db) == EXPECTED

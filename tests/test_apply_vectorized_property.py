@@ -1,20 +1,18 @@
 """Property tests for the r7 vectorized sink paths.
 
 The dict-row path (``apply_rows``) is the long-standing reference
-semantics; every vectorized variant added in r7 must converge a
-randomized changefeed to the SAME final table state:
+semantics; every vectorized variant must converge a randomized
+changefeed to the SAME final table state:
 
-- ``apply_pdf``        (whole-frame run-split)
-- ``apply_pdf`` + collapse_keys (pandas LWW, two statement groups)
+- ``apply_pdf``        (one Arrow block, planned in key waves)
+- ``apply_pdf`` + collapse_keys (keep-last per key, two statement groups)
 - ``apply_pdf_stream`` (per-block apply at arbitrary block splits —
-  the mapInPandas Arrow stream shape)
+  the mapInArrow block stream shape)
 
-No Spark involved: frames are built directly in pandas, exactly the
-shape mapInPandas delivers (object dtype for strings, float64 with
-NaN where ints went nullable). Randomization covers delete
-interleavings (the r7 regression class: per-RUN pandas overhead and
-run→filtered-list index mapping), duplicate keys (LWW), and
-delete-then-reinsert orders.
+No Spark involved: events are built in pandas and converted to Arrow
+tables. Randomization covers delete interleavings (the r7 regression
+class: per-RUN overhead and run→filtered-list index mapping),
+duplicate keys (LWW), and delete-then-reinsert orders.
 """
 
 from __future__ import annotations
@@ -22,6 +20,7 @@ from __future__ import annotations
 import sqlite3
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -58,6 +57,10 @@ def _state(db):
     rows = sorted(con.execute("SELECT k, v FROM t").fetchall())
     con.close()
     return rows
+
+
+def _arrow(pdf):
+    return pa.Table.from_pandas(pdf, preserve_index=False)
 
 
 def _frame(events):
@@ -100,17 +103,17 @@ class TestVectorizedApplyProperty:
         # apply_pdf, uncollapsed: same statements, same order
         db_a = _mk_db(tmp_path, "a")
         wa = _writer(db_a)
-        a_stats = wa.apply_pdf(pdf.copy())
+        a_stats = wa.apply_pdf(_arrow(pdf))
         assert _state(db_a) == ref
         assert (a_stats["upserts"], a_stats["deletes"]) == (
             ref_stats["upserts"],
             ref_stats["deletes"],
         )
 
-        # apply_pdf with pandas LWW collapse: fewer statements, same state
+        # apply_pdf with the keep-last collapse: fewer statements, same state
         db_c = _mk_db(tmp_path, "c")
         wc = _writer(db_c)
-        c_stats = wc.apply_pdf(pdf.copy(), collapse_keys=["k"])
+        c_stats = wc.apply_pdf(_arrow(pdf), collapse_keys=["k"])
         assert _state(db_c) == ref
         assert c_stats["upserts"] + c_stats["deletes"] <= len(events)
 
@@ -119,7 +122,7 @@ class TestVectorizedApplyProperty:
         # same-key runs inside one statement stay correct
         db_m = _mk_db(tmp_path, "m")
         wm = _writer(db_m, multi_values=True)
-        m_stats = wm.apply_pdf(pdf.copy())
+        m_stats = wm.apply_pdf(_arrow(pdf))
         assert _state(db_m) == ref
         assert (m_stats["upserts"], m_stats["deletes"]) == (
             ref_stats["upserts"],
@@ -132,7 +135,7 @@ class TestVectorizedApplyProperty:
         ws = _writer(db_s)
         n = len(pdf)
         cuts = [n * i // nblocks for i in range(nblocks + 1)]
-        blocks = [pdf.iloc[lo:hi] for lo, hi in zip(cuts, cuts[1:]) if hi > lo]
+        blocks = [_arrow(pdf.iloc[lo:hi]) for lo, hi in zip(cuts, cuts[1:]) if hi > lo]
         s_stats = ws.apply_pdf_stream(iter(blocks))
         assert _state(db_s) == ref
         assert (s_stats["upserts"], s_stats["deletes"]) == (
@@ -143,9 +146,9 @@ class TestVectorizedApplyProperty:
     def test_empty_frame_and_stream(self, tmp_path):
         db = _mk_db(tmp_path, "e")
         w = _writer(db)
-        assert w.apply_pdf(_frame([]))["upserts"] == 0
+        assert w.apply_pdf(_arrow(_frame([])))["upserts"] == 0
         assert w.apply_pdf_stream(iter([]))["upserts"] == 0
-        assert w.apply_pdf_stream(iter([_frame([])]))["deletes"] == 0
+        assert w.apply_pdf_stream(iter([_arrow(_frame([]))]))["deletes"] == 0
         assert _state(db) == []
 
     def test_apply_param_groups_matches_collapsed(self, tmp_path):
@@ -154,7 +157,7 @@ class TestVectorizedApplyProperty:
         events = [("I", 1, 10), ("U", 2, 20), ("D", 3, None), ("U", 1, 11)]
         collapsed = {1: ("U", 11), 2: ("U", 20), 3: ("D", None)}
         db_ref = _mk_db(tmp_path, "ref")
-        _writer(db_ref).apply_pdf(_frame(events), collapse_keys=["k"])
+        _writer(db_ref).apply_pdf(_arrow(_frame(events)), collapse_keys=["k"])
 
         db_g = _mk_db(tmp_path, "g")
         wg = _writer(db_g)

@@ -395,6 +395,7 @@ class TestRetryAndBreaker:
         as apply_rows — a non-retryable statement failure lands in
         dead_letters, not a raise (r7 vectorized paths)."""
         import pandas as pd
+        import pyarrow as pa
 
         w = JdbcUpsertWriter(
             connect_fn=lambda: sqlite3.connect(target_db),
@@ -408,7 +409,7 @@ class TestRetryAndBreaker:
             {"op": "I", "o_orderkey": 1, "o_custkey": 2, "o_orderstatus": "O",
              "o_totalprice": 1.0, "o_orderdate": "2024-01-01", "o_orderpriority": "1"}
         ])
-        w.apply_pdf(pdf)
+        w.apply_pdf(pa.Table.from_pandas(pdf, preserve_index=False))
         assert w.stats["failures"] == 1
         assert len(w.dead_letters) == 1
 

@@ -168,15 +168,34 @@ class CDCEngine:
         return pipe.start(available_now=available_now)
 
     def resume_position(self):
-        """Start-position precedence (reference CDCEngine.scala:629-641):
-        snapshot high watermark > last committed (checkpoint) > latest.
+        """Start-position precedence: the snapshot watermark, read by
+        its stored status > last committed (checkpoint) > latest.
+
+        This departs from the reference (CDCEngine.scala:629-641),
+        which resumes from the high watermark whenever one is stored
+        and otherwise ignores the snapshot's status:
+
+        - ``COMPLETED`` resumes from ``high``, as the reference does;
+        - ``SNAPSHOT_DONE`` (the catchup never finished) resumes from
+          ``low``, so the catchup (low, high] replays — the PK upsert is
+          idempotent, so the overlap with what did apply is harmless;
+        - ``ACTIVE`` (the snapshot never finished) raises: streaming
+          from any position would leave the target half-loaded.
 
         Positions may be scalar offsets (single-file / synthetic
         sources) or composite (pos_file, pos_offset) pairs — JSON
         round-trips the pair as a list, normalized back to a tuple here
         so ``position_after`` applies the rotation-safe ordering."""
-        wm = WatermarkStore(self.checkpoint_dir).load(self.snapshot_id)
-        if wm and wm.get("high") is not None:
+        wm = WatermarkStore(self.checkpoint_dir).load(self.snapshot_id) or {}
+        if wm.get("status") == "ACTIVE":
+            raise RuntimeError(
+                f"snapshot {self.snapshot_id!r} is half-loaded (watermark status ACTIVE, "
+                f"low {wm.get('low')!r}): re-run it with start(enable_snapshot=True) "
+                "instead of resuming the stream"
+            )
+        if wm.get("status") == "SNAPSHOT_DONE":
+            return self._norm_pos(wm["low"])
+        if wm.get("high") is not None:
             return self._norm_pos(wm["high"])
         commit = self._last_committed()
         if commit is not None:

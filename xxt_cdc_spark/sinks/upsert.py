@@ -40,6 +40,7 @@ from dataclasses import dataclass, field
 from enum import Enum
 from typing import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -765,11 +766,10 @@ class JdbcUpsertWriter:
 
     def apply_rows(self, rows) -> dict:
         """Apply an iterator of envelope-ish rows (needs ``op`` plus the
-        payload columns), in the order they arrive (``_route_for_apply``
-        sorts by binlog position, or deletes-then-upserts after a
-        collapse); flushes preserve that order: a flush happens whenever
-        the pending op kind flips, so delete/upsert interleavings for
-        different keys never reorder."""
+        payload columns) in the order they arrive: a flush happens
+        whenever the pending op kind flips, so delete/upsert
+        interleavings for different keys never reorder. The strict-order
+        reference the Arrow plan (``_block_runs``) is tested against."""
         pairs = (
             ("delete", tuple(r[k] for k in self.key_cols))
             if r["op"] == OP_DELETE
@@ -780,72 +780,53 @@ class JdbcUpsertWriter:
             return self._apply_runs(conn, self._ordered_runs(pairs))
 
     def apply_pdf(self, pdf, collapse_keys: list[str] | None = None) -> dict:
-        """Vectorized ``apply_rows`` over one pandas frame: zero
-        per-row Python dict/projection work. The frame splits into
-        contiguous same-kind runs (numpy flip scan — exactly the order
-        ``apply_rows``' kind-flip flushes preserve), each statement
-        shape projects ONCE over the whole frame (a pandas
-        iloc+project per run pays ~0.2 ms of frame overhead each —
-        measured 4× the whole apply on a delete-interleaved batch),
-        and ``executemany`` feeds straight from ``itertuples`` tuples.
-        Identical statements, order, retry/breaker/stats behavior to
-        the dict path.
+        """Apply one Arrow block (a Table or a RecordBatch; subclasses
+        override this method by name, so the parameter keeps its name)
+        through ``_block_runs``: the statements, retry/breaker and stats
+        of ``apply_rows`` over its rows, without per-row dict work.
 
-        ``collapse_keys``: LWW-collapse the frame per key FIRST
-        (``drop_duplicates(keep="last")`` — rows must already be in
-        position order, which every caller guarantees via the sorted
-        plan). After the collapse each key carries exactly ONE
-        statement, so cross-key reordering is free and the apply
-        becomes at most two executemany groups (deletes, upserts)
-        instead of one per kind flip — a delete-interleaved changefeed
-        batch has ~1 flip per 5 rows, i.e. ~1.3k commits per 7k-row
-        micro-batch without the collapse. Converged state is
-        identical: same per-key final statement, single serial writer."""
-        if len(pdf) == 0:
+        ``collapse_keys``: first keep only the last row of each key
+        (rows must already be in position order, which every caller
+        guarantees via the sorted plan)."""
+        if pdf.num_rows == 0:
             return dict(self.stats)
         if collapse_keys:
-            pdf = pdf.drop_duplicates(subset=collapse_keys, keep="last")
+            pdf = _as_batch(pdf)
+            pdf = pdf.take(_keep_last(_key_codes([pdf.column(k) for k in collapse_keys])))
         with self._connection() as conn:
-            return self._apply_runs(conn, self._frame_runs(pdf, grouped=bool(collapse_keys)))
+            return self._apply_runs(conn, self._block_runs(pdf))
 
     def apply_pdf_stream(self, frames) -> dict:
-        """``apply_pdf`` over an ITERATOR of pandas frames (the
+        """``apply_pdf`` over an ITERATOR of Arrow blocks (the
         mapInArrow block stream): one connection for the whole
         partition, each block applied AS IT ARRIVES, so the Arrow
         transfer overlaps the sink writes (buffering all blocks first
         measured a ~20% bulk-throughput loss: transfer and sqlite
-        writes serialized instead of pipelining). Per-key statement order is
-        preserved: blocks arrive in partition order and each block
-        flushes in run order."""
-        runs = (run for pdf in frames if len(pdf) for run in self._frame_runs(pdf, grouped=False))
+        writes serialized instead of pipelining). Per-key statement
+        order is preserved: blocks arrive in partition order."""
+        runs = (run for block in frames if block.num_rows for run in self._block_runs(block))
         with self._connection() as conn:
             return self._apply_runs(conn, runs)
 
-    def _frame_runs(self, pdf, grouped: bool):
-        """Run-split one frame into ``(kind, params)`` runs. ``grouped``
-        (valid ONLY post-collapse, one statement per key) yields two
-        order-free kind groups; otherwise contiguous same-kind runs
-        come in frame order, exactly like ``apply_rows``' kind-flip
-        flushes."""
-        import numpy as np
+    def _block_runs(self, block):
+        """Plan one Arrow block as ``(kind, params)`` runs.
 
-        is_del = (pdf["op"] == OP_DELETE).to_numpy()
-        ups_params = list(
-            pdf[self.columns][~is_del].itertuples(index=False, name=None)
-        ) if not is_del.all() else []
-        del_params = list(
-            pdf[self.key_cols][is_del].itertuples(index=False, name=None)
-        ) if is_del.any() else []
-        if grouped:
-            yield "delete", del_params
-            yield "upsert", ups_params
-            return
-        flips = np.flatnonzero(is_del[1:] != is_del[:-1]) + 1
-        bounds = [0, *flips.tolist(), len(pdf)]
-        params = {"delete": iter(del_params), "upsert": iter(ups_params)}
-        for lo, hi in zip(bounds, bounds[1:]):
-            kind = "delete" if is_del[lo] else "upsert"
-            yield kind, list(itertools.islice(params[kind], hi - lo))
+        Only statements on the same key must keep their order. A
+        statement's wave is how many earlier statements in the block
+        have its key, so a wave holds each key at most once and its
+        statements commute: the runs are wave 0's deletes, then its
+        upserts, then wave 1's, and so on, each in block order. A
+        collapsed block is one wave: two runs."""
+        import pyarrow.compute as pc
+
+        block = _as_batch(block)
+        is_del = pc.fill_null(pc.equal(block.column("op"), OP_DELETE), False)
+        run = 2 * _waves(_key_codes([block.column(k) for k in self.key_cols]))
+        run += ~is_del.to_numpy(zero_copy_only=False)
+        order = np.argsort(run, kind="stable")
+        for rows in np.split(order, np.flatnonzero(np.diff(run[order])) + 1):
+            kind, names = ("upsert", self.columns) if run[rows[0]] % 2 else ("delete", self.key_cols)
+            yield kind, _bind(block if len(rows) == len(run) else block.take(rows), names)
 
     def apply_param_groups(self, upserts: list[tuple], deletes: list[tuple]) -> dict:
         """Apply pre-projected parameter tuples (upserts shaped like
@@ -1175,54 +1156,45 @@ def apply_batch_fanout(
         ["pos_file", "pos_offset"],
     )
 
-    import pandas as pd
-
-    def _s(v):
-        # Arrow→pandas nulls surface as None (object dtype); guard
-        # against anything non-str (e.g. NaN) reaching json.loads
-        return v if isinstance(v, str) and v else None
-
     def _run_blocks(blocks):
         # Dispatch shape (r7, third iteration — every change below
         # measured on the 10k-table fanout bench):
         # 1. ONE concat per partition, then a VECTORIZED LWW
-        #    collapse (drop_duplicates(keep="last") — rows arrive
-        #    position-sorted, so last-kept per (table, key) IS the
-        #    old window's row_number()=1). Keyless rows bypass the
+        #    collapse (numpy keep-last per (table, key) code — rows
+        #    arrive position-sorted, so the last row kept IS the old
+        #    window's row_number()=1). Keyless rows bypass the
         #    collapse untouched.
-        # 2. One itertuples pass over the SURVIVORS builds the
-        #    statement param tuples directly — no per-row dict
+        # 2. One pass over the SURVIVORS' five dispatch columns builds
+        #    the statement param tuples directly — no per-row dict
         #    projection, no dict-of-dicts, no re-iteration in
         #    apply_rows (apply_param_groups consumes the tuples
         #    as-is; group order across keys is free post-collapse).
         # Rejected shapes from earlier rounds still apply: a
         # per-block apply double-counts tables spanning Arrow
-        # blocks (writer stats are cumulative), and a pandas
-        # per-table groupby pays per-group slicing that HALVES
-        # throughput at 10 rows/table.
-        frames = list(blocks)
-        if not frames:
-            yield pd.DataFrame({"table": [], "applied": []})
+        # blocks (writer stats are cumulative), and a per-table
+        # groupby pays per-group slicing that HALVES throughput at
+        # 10 rows/table.
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        batches = list(blocks)
+        if not any(b.num_rows for b in batches):
             return
-        pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        keyed = pdf["key"].notna() & (pdf["key"] != "")
+        block = _as_batch(pa.Table.from_batches(batches))
+        keyed = pc.fill_null(pc.not_equal(block.column("key"), ""), False)
+        keyless = np.flatnonzero(~keyed.to_numpy(zero_copy_only=False))
         # Tables carrying keyless rows must apply ORDER-PRESERVING:
         # a keyless row can hold several statements for one
         # underlying row, so the two-group apply_param_groups
         # (all deletes, then all upserts) would flip an
         # insert-then-delete into delete-then-insert and resurrect
         # the row (r7 advice). Those tables route through
-        # apply_ordered_params (kind-flip flushes in frame order);
+        # apply_ordered_params (kind-flip flushes in block order);
         # fully-keyed tables keep the cheap two-group path.
-        keyless_tables: set[str] = (
-            set() if bool(keyed.all()) else set(pdf.loc[~keyed, "table"])
-        )
-        if bool(keyed.all()):
-            pdf = pdf.drop_duplicates(["table", "key"], keep="last")
-        elif bool(keyed.any()):
-            pdf = pd.concat(
-                [pdf[keyed].drop_duplicates(["table", "key"], keep="last"), pdf[~keyed]]
-            ).sort_index(kind="stable")
+        keyless_tables = set(block.column("table").take(keyless).to_pylist())
+        codes = _key_codes([block.column("table"), block.column("key")])
+        codes[keyless] = len(codes) + np.arange(len(keyless))  # a key of its own: always kept
+        block = block.take(_keep_last(codes))
         writers: dict[str, object] = {}
         ups: dict[str, list] = {}
         dels: dict[str, list] = {}
@@ -1230,9 +1202,7 @@ def apply_batch_fanout(
         base: dict[str, int] = {}
         skipped: set[str] = set()
         deferred_keys: set[str] = set()
-        for t, op, key, before, after in pdf[
-            ["table", "op", "key", "before", "after"]
-        ].itertuples(index=False, name=None):
+        for t, op, key, before, after in zip(*(c.to_pylist() for c in block.columns)):
             writer = writers.get(t)
             if writer is None:
                 if t in skipped:
@@ -1340,19 +1310,16 @@ def apply_batch_fanout(
                 if t in keyless_tables:
                     seq[t] = []
             if op == OP_DELETE:
-                k = _s(key)
-                src = json.loads(k) if k else {}
-                b = _s(before)
-                if b:
-                    src = {**json.loads(b), **src}
+                src = json.loads(key) if key else {}
+                if before:
+                    src = {**json.loads(before), **src}
                 p = tuple(src.get(c) for c in writer.key_cols)
                 if t in keyless_tables:
                     seq[t].append(("delete", p))
                 else:
                     dels[t].append(p)
             else:
-                a = _s(after)
-                src = json.loads(a) if a else {}
+                src = json.loads(after) if after else {}
                 p = tuple(src.get(c) for c in writer.columns)
                 if t in keyless_tables:
                     seq[t].append(("upsert", p))
@@ -1376,8 +1343,9 @@ def apply_batch_fanout(
                 _trim_cached_dead_letters(writer)
         if deferred_keys:
             commit_pooled(deferred_keys)
-        yield pd.DataFrame(
-            {"table": list(applied_local), "applied": list(applied_local.values())}
+        yield pa.RecordBatch.from_pydict(
+            {"table": list(applied_local), "applied": list(applied_local.values())},
+            schema=pa.schema([("table", pa.string()), ("applied", pa.int64())]),
         )
 
     applied: dict[str, int] = {}
@@ -1386,40 +1354,71 @@ def apply_batch_fanout(
     # db/ts/gtid/pos_* (~40% of envelope bytes) and the projection
     # adds no exchange, so partition order survives
     dispatch_cols = routed.select("table", "op", "key", "before", "after")
-    for r in dispatch_cols.mapInPandas(_run_blocks, "table string, applied long").collect():
+    for r in dispatch_cols.mapInArrow(_run_blocks, "table string, applied long").collect():
         applied[r["table"]] = applied.get(r["table"], 0) + r["applied"]
     return applied
 
 
-def _arrow_to_frame(batch):
-    """Arrow table or record batch → the pandas frame the vectorized
-    writer binds from. The executor ``mapInArrow`` blocks and the
-    driver ``toArrow`` collect both convert here, and bind what
-    ``apply_rows`` binds for the same values:
+def _as_batch(block):
+    """A block as one RecordBatch: the driver's ``toArrow()`` Table
+    combines its chunks; a ``mapInArrow`` batch passes as is."""
+    import pyarrow as pa
 
-    - ``integer_object_nulls`` keeps a nullable BIGINT as Python ints
-      and None (the default float64 upcast rounds values past 2**53);
-    - a null DOUBLE/FLOAT binds as None, not NaN (MySQL drivers reject
-      NaN); only a column that holds a null pays the object conversion;
-    - a tz-aware timestamp column drops its zone, keeping the wall
-      clock in its own zone (the session zone Spark stamps, so the
-      value matches Spark SQL's rendering on any host zone), and
-      arrives as naive ``datetime`` objects — DB-API drivers bind
-      those, not pandas ``Timestamp`` (sqlite3 rejects it)."""
-    import pandas as pd
+    return block.combine_chunks().to_batches()[0] if isinstance(block, pa.Table) else block
+
+
+def _key_codes(arrays) -> np.ndarray:
+    """Dense integer codes of the keys the equal-length ``arrays`` form
+    row by row: equal keys, equal codes. A null component is one value
+    of its own."""
+    import pyarrow.compute as pc
+
+    codes = None
+    for a in arrays:
+        enc = pc.dictionary_encode(a, null_encoding="encode")
+        c = enc.indices.to_numpy().astype(np.int64)
+        # re-densify each product, so the next one cannot overflow
+        codes = c if codes is None else np.unique(codes * len(enc.dictionary) + c, return_inverse=True)[1]
+    return codes
+
+
+def _waves(codes) -> np.ndarray:
+    """Each row's wave: how many earlier rows share its key code."""
+    order = np.argsort(codes, kind="stable")
+    pos = np.arange(len(codes))
+    first = np.diff(codes[order], prepend=-1) != 0
+    wave = np.empty_like(pos)
+    wave[order] = pos - np.maximum.accumulate(np.where(first, pos, 0))
+    return wave
+
+
+def _keep_last(codes) -> np.ndarray:
+    """Positions of each key's last row, in block order: the LWW
+    collapse of a position-ordered block."""
+    return np.flatnonzero(_waves(codes) == np.bincount(codes)[codes] - 1)
+
+
+def _bind(batch, names) -> list[tuple]:
+    """Parameter tuples of ``names`` for every row of ``batch``, equal in
+    value and Python type to what ``apply_rows`` binds for the same
+    rows. A tz-aware timestamp keeps the wall clock in its own zone
+    (the session zone Spark stamps) and drops the zone. A column that
+    holds a null binds through ``to_pylist()``, so a null is None and a
+    NaN stays NaN; the others take the faster numpy hop, whose
+    ``tolist()`` yields the same values and types."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    cols = [
-        pc.local_timestamp(c) if pa.types.is_timestamp(c.type) and c.type.tz else c
-        for c in batch.columns
-    ]
-    batch = type(batch).from_arrays(cols, names=batch.schema.names)
-    pdf = batch.to_pandas(integer_object_nulls=True, date_as_object=True, timestamp_as_object=True)
-    for name, c in zip(batch.schema.names, cols):
-        if pa.types.is_floating(c.type) and c.null_count:
-            pdf[name] = pd.Series(c.to_pylist(), dtype=object)
-    return pdf
+    cols = []
+    for name in names:
+        c = batch.column(name)
+        if pa.types.is_timestamp(c.type) and c.type.tz:
+            c = pc.local_timestamp(c)
+        if c.null_count:
+            cols.append(c.to_pylist())
+        else:
+            cols.append(c.to_numpy(zero_copy_only=False).tolist())
+    return list(zip(*cols))
 
 
 def _write_dead_letters(writer, dead_letter_dir: str | None) -> None:
@@ -1450,37 +1449,30 @@ def _route_for_apply(
     that partitioning, so Spark plans no second exchange for it.
 
     ``collapse=False`` sorts each partition by binlog position: every
-    event applies, in order. After the collapse every key carries
-    exactly one statement, so statements on distinct keys commute and
-    each partition sorts deletes first, then upserts, each by position:
-    the writer's kind-flip run split sees at most two runs per block
-    (one flush per ``batch_size`` rows of each kind) instead of one per
-    delete/upsert flip. Deletes first is the order ``apply_pdf`` uses
-    after its own collapse, and it never hurts a secondary unique
-    constraint, since a delete only frees values."""
+    event applies, and the writer keeps each key's events in that
+    order. After the collapse every key carries exactly one statement,
+    so the partition needs no order at all: the writer's plan
+    (``_block_runs``) applies each block as one wave, deletes then
+    upserts."""
     routed = batch_df.repartition(num_partitions, *key_cols)
-    if not collapse:
-        return routed.sortWithinPartitions(*order_exprs(order_cols))
-    return last_write_wins(routed, key_cols, order_cols).sortWithinPartitions(
-        F.col("op") != OP_DELETE, *order_exprs(order_cols)
-    )
+    if collapse:
+        return last_write_wins(routed, key_cols, order_cols)
+    return routed.sortWithinPartitions(*order_exprs(order_cols))
 
 
 def _apply_partitions(routed: DataFrame, apply_frames, keys=_STAT_KEYS) -> dict:
     """Run ``apply_frames`` once per partition of ``routed`` and sum the
     stats dicts it returns over ``keys``.
 
-    ``apply_frames`` receives the partition's ``mapInArrow`` blocks,
-    each converted by ``_arrow_to_frame``, lazily and in partition
-    order (see ``apply_pdf_stream``). The stats come back with the same
-    job: callers get applied counts without a ``count()`` action over
-    the batch. ``mapInArrow``, not ``mapInPandas``: the latter turns a
-    nullable BIGINT into float64."""
+    ``apply_frames`` receives the partition's ``mapInArrow`` record
+    batches, lazily and in partition order (see ``apply_pdf_stream``).
+    The stats come back with the same job: callers get applied counts
+    without a ``count()`` action over the batch."""
 
     def _task(batches):
         import pyarrow as pa
 
-        stats = apply_frames(_arrow_to_frame(b) for b in batches)
+        stats = apply_frames(batches)
         yield pa.RecordBatch.from_pylist([{k: stats[k] for k in keys}])
 
     parts = routed.mapInArrow(_task, ", ".join(f"{k} long" for k in keys)).collect()
@@ -1503,10 +1495,11 @@ def apply_batch(
     1. hash-route by key (R1) — the batch's one exchange;
     2. LWW-collapse on that partitioning (R5) — at most one statement
        per key;
-    3. sort each partition: deletes, then upserts, after the collapse
-       (two statement groups, as the reference's apply worker groups
-       D/U/I); by position without it (R4);
-    4. one writer per partition applies its slice serially.
+    3. without the collapse, sort each partition by position (R4);
+    4. one writer per partition applies its slice serially, each Arrow
+       block in key waves (``_block_runs``): a collapsed block is two
+       statement groups, deletes then upserts, as the reference's
+       apply worker groups D/U/I.
 
     Replays after failure are safe: the sink is a PK-upsert (same
     effectively-once argument as the reference, README.md:526-548).
@@ -1515,10 +1508,11 @@ def apply_batch(
     improving on the reference, whose failed events could be silently
     skipped (its README.md:731).
 
-    ``collapse=False`` skips the LWW window and its sort: the
-    position-sorted per-partition writer still applies every key's
-    events in order, so the converged state is identical — it just
-    executes more statements, and flushes at every delete/upsert flip.
+    ``collapse=False`` skips the LWW window: the position-sorted
+    per-partition writer applies every key's events in order, so the
+    converged state is identical — it just executes more statements,
+    and flushes up to twice per key wave (a block's largest per-key
+    event count) instead of twice per block.
     The right trade for latency-sensitive small batches with few
     per-key repeats (the reference applies every event too); keep
     collapsing for update-heavy replays: on ``perfbench``'s bootstrap
@@ -1526,8 +1520,8 @@ def apply_batch(
     (SCALING.md "Bulk apply: one exchange, two statement groups,
     Arrow decode").
 
-    Every path ships rows to the writer as Arrow blocks and binds them
-    through ``_arrow_to_frame``. ``arrow`` selects nothing: it stays for
+    Every path ships rows to the writer as Arrow blocks and binds
+    parameters straight from them (``_bind``). ``arrow`` selects nothing: it stays for
     callers that pass ``arrow=True``, and ``arrow=False`` (the removed
     pickled-Row executor path) raises ``ValueError``.
 
@@ -1554,11 +1548,10 @@ def apply_batch(
     pipeline/CDCStreamPipeline.scala mapAsync(1) stage). Row order is
     preserved (collect concatenates partitions in order, each sorted
     by position; co-located keys keep their per-key order). With
-    ``collapse=True`` the LWW collapse runs pandas-side
-    (``drop_duplicates(keep="last")`` — O(rows), no shuffle) and the
-    apply degenerates to two executemany groups, vs one flush per
-    delete/upsert interleaving otherwise (~1.3k per 7k-row changefeed
-    batch). Use the distributed path for bulk/throughput batches — a
+    ``collapse=True`` the LWW collapse is a numpy keep-last per key on
+    the collected block (O(rows), no shuffle) and the apply is two
+    executemany groups; without it, two per key wave. Use the
+    distributed path for bulk/throughput batches — a
     driver collect of a multi-million-row batch is the anti-pattern
     everywhere else in this engine.
     """
@@ -1573,12 +1566,12 @@ def apply_batch(
             "driver_apply requires num_partitions=None (transport-aligned latency posture)"
         )
     if driver_apply:
-        # LWW collapse (when asked) happens pandas-side on the driver —
-        # O(rows) drop_duplicates, no shuffle — so the plan below stays
-        # sort-only either way
+        # LWW collapse (when asked) happens on the collected block —
+        # O(rows) keep-last per key, no shuffle — so the plan below
+        # stays sort-only either way
         writer = writer_factory()
-        # rotation-safe sort (order_exprs, not raw columns): the pandas
-        # LWW collapse below is keep="last" over FRAME order, so a
+        # rotation-safe sort (order_exprs, not raw columns): the LWW
+        # collapse below keeps the last row in BLOCK order, so a
         # binlog suffix widening (binlog.999999 → binlog.1000000) under
         # a plain lexicographic sort would keep the pre-rotation row
         # (r7 advice — same hazard route()/last_write_wins already guard)
@@ -1588,8 +1581,7 @@ def apply_batch(
         # spark.sql.execution.arrow.pyspark.enabled=false (measured
         # 920 vs ~190 ms per 7k-row batch)
         stats = writer.apply_pdf(
-            _arrow_to_frame(sorted_df.toArrow()),
-            collapse_keys=key_cols if collapse else None,
+            sorted_df.toArrow(), collapse_keys=key_cols if collapse else None
         )
         _write_dead_letters(writer, dead_letter_dir)
         return {k: stats[k] for k in _STAT_KEYS}

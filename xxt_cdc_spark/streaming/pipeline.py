@@ -256,7 +256,8 @@ def low_latency_apply_fn(
     the typed payload struct (pure column pruning — pair with
     ``read_typed_envelope_stream``, which already parsed it), then
     ``apply_batch(driver_apply=True)``: zero shuffles, Arrow collect,
-    ONE vectorized driver-side writer, pandas LWW collapse.
+    ONE driver-side writer binding straight from the Arrow table, and a
+    numpy keep-last-per-key LWW collapse.
 
     Measured p50 229 / p95 247 ms per ~7k-row micro-batch vs
     386/421 for the r6 executor-path shape (bench.py stream phase;
